@@ -1,13 +1,18 @@
-.PHONY: test gate bench scale package job clean
+.PHONY: test gate bench perfbench scale package job clean
 
-test:            ## golden equality + operator tests (north-rule command)
-	python -m pytest tests/ -x -q
+test:            ## tier-1: the full suite (ROADMAP.md "Tier-1 verify")
+	SPARK_GRAFT_CPUS="$$(env -u OMP_NUM_THREADS nproc)" SPARK_LOCAL_DIRS=/tmp/spark-local \
+		timeout -k 10 2670 python -m pytest tests/ -q \
+		--continue-on-collection-errors -p no:cacheprovider
 
 gate:            ## Spark vs DuckDB parity for every query (driver replica)
 	python scripts/check_oracle.py /root/testdata/sf0.01
 
 bench:           ## one-JSON-line throughput benchmark
 	python bench.py
+
+perfbench:       ## one BENCHMARK.json run (perfbench/README.md) on the mixed workload
+	python3 perfbench/run.py --workload mixed --seed 1 --seconds 20 --trace 0
 
 scale:           ## N vs 4N scaling efficiency → BENCH.md
 	python scripts/scaling_bench.py --reps 100

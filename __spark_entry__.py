@@ -25,7 +25,7 @@ from collections.abc import Callable
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from paddleocr_spark.functions import textstats as TS
-from paddleocr_spark.golden import ensure_golden, golden_dir
+from paddleocr_spark.golden import GoldenCorruptError, ensure_golden, golden_dir
 from paddleocr_spark.operators import ann as ANN
 from paddleocr_spark.operators import dedup as DD
 from paddleocr_spark.operators import pack as PK
@@ -55,16 +55,15 @@ def _oracle_sf_dir() -> str:
 def _golden_quiet(sf_dir: str) -> None:
     """Freeze the pure-Python golden relations for ``sf_dir`` (cached, ~3 s
     cold at sf0.01). Called from every extract_* query so the goldens exist
-    no matter in which order the driver materializes queries vs oracles;
-    failures are swallowed — the Spark query itself must still run (the
-    compare would then fail loudly on the oracle side instead). Also records
-    the sf dir so the oracle SQL reads the matching golden relations."""
+    whichever of the queries and oracles is materialized first.
+    Quiet only when ``sf_dir`` has no documents.parquet, so no golden dir
+    can exist (the Spark query then fails on its own scan); a present but
+    corrupt golden dir raises ``GoldenCorruptError``. Also records the sf
+    dir so the oracle SQL reads the matching golden relations."""
     global _last_extract_sf_dir
     _last_extract_sf_dir = sf_dir
-    try:
+    if os.path.exists(os.path.join(sf_dir, "documents.parquet")):
         ensure_golden(sf_dir)
-    except Exception:
-        pass
 
 
 def _par(spark: SparkSession, df: DataFrame) -> DataFrame:
@@ -2831,11 +2830,13 @@ FROM words
     # (/root/reference/test_tipc/compare_results.py:58-80) expressed in the
     # driver contract. See paddleocr_spark/golden.py. If the goldens cannot
     # be built (sf dir missing), the entries are omitted and the driver
-    # falls back to the rows-only check.
+    # falls back to the rows-only check; a corrupt golden dir raises.
     try:
         _sf = _oracle_sf_dir()
         ensure_golden(_sf)
         _G = golden_dir(_sf)
+    except GoldenCorruptError:
+        raise
     except Exception:
         return sql
 

@@ -6,6 +6,9 @@ extraction over tables of multi-turn agent transcripts. See SURVEY.md for the
 operator-by-operator mapping and docs/SPEC.md for the extraction semantics.
 """
 
+# first: every Python worker that unpickles one of the package's UDFs
+# installs the zipimport directory cache before its next task
+from . import _zipcache  # noqa: F401
 from .config import ExtractConfig, DEFAULT_CONFIG
 from .kernel import extract_payload, extract_batch, assemble_text
 from .oracle import oracle_extract

@@ -2691,12 +2691,12 @@ def _interpret(content: str, mb_w: float, mb_h: float,
             # per-show work and computes here; a widths buffer uses the
             # accumulated per-code counters. Tf and Q flush, so the active
             # table is constant across a buffer's life.
-            # v53: Identity-V writes DOWN — per-glyph advance is the
-            # /DW2 default (1000 glyph units = 1·fs) + Tc; Tw never
-            # applies (2-byte codes, the v38 rule), Tz is horizontal-
-            # only (§9.3.4) and rise is ignored in vertical mode
-            # (pinned); a horizontal /W table does not apply vertically
-            # (/W2 unimplemented — pinned).
+            # v53: Identity-V writes DOWN — with no vertical metrics the
+            # per-glyph advance is the ISO default (1000 glyph units =
+            # 1·fs) + Tc; Tw never applies (2-byte codes, the v38 rule),
+            # Tz is horizontal-only (§9.3.4) and rise is ignored in
+            # vertical mode (pinned); a horizontal /W table never applies
+            # vertically — v60 /W2 + /DW2 metrics replace it.
             vmode = cur_map is not None and cur_map[0] in _VERT_KINDS
             if vmode:
                 if cur_wd is not None and len(cur_wd) == 3:
@@ -3568,8 +3568,9 @@ def _content_resources(text: str):
 
 
 def _has_encrypt(text: str) -> bool:
-    """Token-exact ``/Encrypt`` anywhere (SPEC §3b Encryption refusal,
-    v11); ``/EncryptMetadata`` does not match."""
+    """Token-exact ``/Encrypt`` anywhere (SPEC §3b Encryption, v11
+    detection; v59 decrypts the empty-user-password case);
+    ``/EncryptMetadata`` does not match."""
     k = -1
     while True:
         k = text.find("/Encrypt", k + 1)

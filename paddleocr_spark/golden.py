@@ -105,8 +105,26 @@ def _stamp(sf_dir: str) -> str:
     )
 
 
+class GoldenCorruptError(RuntimeError):
+    """A golden dir is present but its meta.json or a table is unreadable."""
+
+
+GOLDEN_TABLES = (
+    "corpus.parquet",
+    "extract.parquet",
+    "extract_paras.parquet",
+    "extract_formula.parquet",
+    "extract_walk.parquet",
+)
+
+
 def ensure_golden(sf_dir: str) -> str:
-    """Build (if stale/missing) and return the golden dir for ``sf_dir``."""
+    """Build (if stale/missing) and return the golden dir for ``sf_dir``.
+
+    Raises ``GoldenCorruptError`` when the dir's meta.json cannot be parsed,
+    or when it is current but a table is missing or has no readable parquet
+    footer: a corrupt golden must fail loudly, never be rebuilt over or read
+    as a silent diff."""
     import pyarrow as pa
     import pyarrow.parquet as pq
 
@@ -115,10 +133,20 @@ def ensure_golden(sf_dir: str) -> str:
     stamp = _stamp(sf_dir)
     try:
         with open(meta_path) as f:
-            if json.load(f).get("stamp") == stamp:
-                return dest
-    except (OSError, ValueError):
-        pass
+            meta = json.load(f)
+    except FileNotFoundError:
+        meta = {}
+    except (OSError, ValueError) as e:
+        raise GoldenCorruptError(f"{meta_path}: {e}") from e
+    if not isinstance(meta, dict):
+        raise GoldenCorruptError(f"{meta_path}: not a JSON object")
+    if meta.get("stamp") == stamp:
+        for name in GOLDEN_TABLES:
+            try:
+                pq.read_metadata(os.path.join(dest, name))
+            except (OSError, ValueError) as e:
+                raise GoldenCorruptError(f"{os.path.join(dest, name)}: {e}") from e
+        return dest
 
     import duckdb
 

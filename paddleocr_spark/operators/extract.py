@@ -99,7 +99,6 @@ def extract(
     cfg: ExtractConfig = DEFAULT_CONFIG,
     salt: bool = True,
     num_partitions: int | None = None,
-    sort_by_len: bool = False,
     keep_truncated: bool = False,
 ) -> DataFrame:
     """transcripts(conv_id, turn_idx, role, text, tool, ts) →
@@ -107,13 +106,11 @@ def extract(
 
     ``salt=True`` repartitions on (conv_id, pmod(hash(turn_idx), S)) so a
     single million-turn conversation spreads across S partitions (SURVEY.md §7
-    hard-part #2). ``sort_by_len`` sorts within partitions by payload length —
-    the aspect-ratio-sorted batching analog
-    (/root/reference/tools/infer/predict_rec.py:582-612). It is OFF by
-    default: unlike the reference's fixed-width tensor batches, this kernel
-    has no padding cost, and the extra in-partition sort of fat string rows
-    measurably destabilized throughput (68→100 s drift across reps at 32
-    cores vs a stable 42 s without it; see docs/PLAN.md).
+    hard-part #2). Rows are not length-sorted within partitions (PaddleOCR's
+    aspect-ratio-sorted batching, tools/infer/predict_rec.py:582-612): this
+    kernel has no padding cost, and the sort of fat string rows measurably
+    destabilized throughput (68→100 s drift across reps at 32 cores vs a
+    stable 42 s without it; see docs/PLAN.md).
     """
     spark = df.sparkSession
     n = num_partitions or spark.sparkContext.defaultParallelism * 2
@@ -121,8 +118,6 @@ def extract(
         df = df.repartition(
             n, F.col("conv_id"), F.pmod(F.hash("turn_idx"), F.lit(cfg.salt_buckets))
         )
-    if sort_by_len:
-        df = df.sortWithinPartitions(F.length(F.col("text")).asc_nulls_first())
 
     extract_udf = make_extract_udf(cfg)
     # extracted_text comes straight from the kernel: assemble_text runs in

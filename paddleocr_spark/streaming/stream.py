@@ -54,7 +54,7 @@ def extract_stream(
     available_now: bool = True,
 ):
     """Streaming extraction → parquet sink. Returns the started query."""
-    out = extract(stream_df, cfg=cfg, sort_by_len=False)
+    out = extract(stream_df, cfg=cfg)
     writer = (
         out.writeStream.format("parquet")
         .option("path", out_path)

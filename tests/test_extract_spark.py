@@ -56,9 +56,9 @@ def test_determinism_across_parallelism(spark, transcripts):
         return sorted((r["conv_id"], r["turn_idx"], r["extracted_text"],
                        r["n_spans"], r["n_dropped"]) for r in rows)
 
-    a = run(num_partitions=2, salt=False, sort_by_len=False)
-    b = run(num_partitions=16, salt=True, sort_by_len=True)
-    c = run(num_partitions=7, salt=True, sort_by_len=False)
+    a = run(num_partitions=2, salt=False)
+    b = run(num_partitions=16, salt=True)
+    c = run(num_partitions=7, salt=True)
     assert a == b == c
 
 

@@ -9,11 +9,16 @@ an exact DuckDB oracle with no strays.
 """
 
 import importlib.util
+import json
+import os
+
+import pytest
 
 
 def _load_entry():
     spec = importlib.util.spec_from_file_location(
-        "entry_mod", "/root/repo/__spark_entry__.py"
+        "entry_mod",
+        os.path.join(os.path.dirname(os.path.dirname(__file__)), "__spark_entry__.py"),
     )
     m = importlib.util.module_from_spec(spec)
     spec.loader.exec_module(m)
@@ -48,3 +53,33 @@ def test_registry_window_and_oracle_parity():
         f"stray={sorted(set(o) - set(q))}"
     )
     assert "e2e_spotting" in q  # the §2.9 closer stays registered
+
+
+def test_golden_quiet_without_documents(tmp_path, monkeypatch):
+    """No documents.parquet → no golden dir can exist → quiet, nothing built."""
+    from paddleocr_spark import golden
+
+    monkeypatch.setattr(golden, "GOLDEN_ROOT", str(tmp_path / "golden"))
+    _load_entry()._golden_quiet(str(tmp_path / "sf_absent"))
+    assert not (tmp_path / "golden").exists()
+
+
+@pytest.mark.parametrize("corrupt", ["meta_json", "table"])
+def test_golden_quiet_raises_on_corrupt_dir(tmp_path, monkeypatch, corrupt):
+    from paddleocr_spark import golden
+
+    monkeypatch.setattr(golden, "GOLDEN_ROOT", str(tmp_path / "golden"))
+    sf = tmp_path / "sf_corrupt"
+    sf.mkdir()
+    (sf / "documents.parquet").write_bytes(b"stat-only stand-in")
+    dest = tmp_path / "golden" / "sf_corrupt"
+    dest.mkdir(parents=True)
+    if corrupt == "meta_json":
+        (dest / "meta.json").write_text("{not json")
+    else:
+        # current stamp, but the tables are garbage
+        (dest / "meta.json").write_text(json.dumps({"stamp": golden._stamp(str(sf))}))
+        for name in golden.GOLDEN_TABLES:
+            (dest / name).write_bytes(b"not parquet")
+    with pytest.raises(golden.GoldenCorruptError):
+        _load_entry()._golden_quiet(str(sf))
