@@ -3,7 +3,7 @@
 test:            ## tier-1: the full suite (ROADMAP.md "Tier-1 verify")
 	SPARK_GRAFT_CPUS="$$(env -u OMP_NUM_THREADS nproc)" SPARK_LOCAL_DIRS=/tmp/spark-local \
 		timeout -k 10 2670 python -m pytest tests/ -q \
-		--continue-on-collection-errors -p no:cacheprovider
+		--continue-on-collection-errors -p no:cacheprovider --durations=25
 
 gate:            ## Spark vs DuckDB parity for every query (driver replica)
 	python scripts/check_oracle.py /root/testdata/sf0.01

@@ -7,9 +7,6 @@ single frozen dataclass: Catalyst is the plan IR, this is the knob set.
 
 Threshold lineage (reference file:line → field here):
 - ``min_chars``       ← DBPostProcess ``min_size=3`` (ppocr/postprocess/db_postprocess.py:34-57)
-- ``max_link_density``← box_thresh-style keep predicate (db_postprocess.py:126-158);
-                        Boilerpipe/Readability link-density rule re-expressed as the
-                        integer comparison ``2*link_chars <= total_chars``
 - ``max_candidates``  ← DBPostProcess ``max_candidates=1000`` (db_postprocess.py:38,75,126)
 - ``drop_score``      ← tools/infer/utility.py:109 (default 0.5), applied at
                         tools/infer/predict_system.py:149-154
@@ -31,7 +28,6 @@ from dataclasses import dataclass, field
 class ExtractConfig:
     # -- HTML block keep predicates (detect analog) --
     min_chars: int = 3              # blocks shorter than this are dropped
-    max_link_density: float = 0.5   # kept iff 2*link_chars <= total_chars
     max_candidates: int = 1000      # cap candidate blocks per turn
     drop_score: float = 0.5         # span score floor (score = 1 - link_density)
 

@@ -819,6 +819,7 @@ def _lzw_encode(data: bytes, early: int = 1) -> bytes:
         while nbits >= 8:
             nbits -= 8
             out.append((acc >> nbits) & 0xFF)
+        acc &= (1 << nbits) - 1  # drop emitted bits: linear, not quadratic
     if nbits:
         out.append((acc << (8 - nbits)) & 0xFF)
     return bytes(out)
@@ -1069,8 +1070,9 @@ def _encrypt_doc_v59(doc: str, rng: random.Random) -> str:
         aes_encrypt_cbc,
         file_key_rc4,
         object_key,
-        r6_make_user_entries,
         rc4,
+        user_check_r2,
+        user_check_r34,
     )
     from .functions.realpdf import _object_map
 
@@ -1096,13 +1098,7 @@ def _encrypt_doc_v59(doc: str, rng: random.Random) -> str:
         )
     else:
         key = file_key_rc4(o, p, id0, r, nbytes)
-        if r == 2:
-            u = rc4(key, _CRYPT_PAD)
-        else:
-            x = rc4(key, __import__("hashlib").md5(_CRYPT_PAD + id0).digest())
-            for it in range(1, 20):
-                x = rc4(bytes(b ^ it for b in key), x)
-            u = x + bytes(16)
+        u = user_check_r2(key) if r == 2 else user_check_r34(key, id0) + bytes(16)
         uent = f"/O <{o.hex()}> /U <{u.hex()}>"
     objs, intervals = _object_map(doc)
     out = []
@@ -1219,16 +1215,6 @@ def _encrypt_doc_v59(doc: str, rng: random.Random) -> str:
         1,
     )
     return doc
-
-
-_CRYPT_PAD = bytes(
-    (
-        0x28, 0xBF, 0x4E, 0x5E, 0x4E, 0x75, 0x8A, 0x41,
-        0x64, 0x00, 0x4E, 0x56, 0xFF, 0xFA, 0x01, 0x08,
-        0x2E, 0x2E, 0x00, 0xB6, 0xD0, 0x68, 0x3E, 0x80,
-        0x2F, 0x0C, 0xA9, 0xFE, 0x64, 0x53, 0x69, 0x7A,
-    )
-)
 
 
 def _make_realpdf(rng: random.Random, words: List[str]) -> str:

@@ -373,15 +373,6 @@ def _shadowroot_in_tag(low: str) -> bool:
     return False
 
 
-def _is_sidebar(tag_token: str, boiler_class: str) -> bool:
-    if "=" not in tag_token:  # a class attr requires '='; skip the regex
-        return False
-    m = _CLASS_RE.search(tag_token)
-    if not m:
-        return False
-    return boiler_class in _class_value(m).split()
-
-
 # Parsed-tag cache: token string → (closing, name, self_closing, class_tokens).
 # Tag tokens repeat heavily within and across payloads (<p>, </p>, <b>, …), so
 # one dict probe replaces regex match + groups + lower + endswith + class

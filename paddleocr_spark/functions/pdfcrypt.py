@@ -162,20 +162,38 @@ def _inv_cipher_block(block: bytes, w, nr: int) -> bytes:
     return bytes(st)
 
 
+def _cbc_encrypt(key: bytes, iv: bytes, data: bytes) -> bytes:
+    """AES-CBC over whole blocks: no padding, IV not prepended."""
+    w = _expand_key(key)
+    nr = len(key) // 4 + 6
+    prev = iv
+    out = bytearray()
+    for off in range(0, len(data), 16):
+        blk = bytes(x ^ y for x, y in zip(data[off : off + 16], prev))
+        prev = _cipher_block(blk, w, nr)
+        out += prev
+    return bytes(out)
+
+
+def _cbc_decrypt(key: bytes, iv: bytes, data: bytes) -> bytearray:
+    """Inverse of ``_cbc_encrypt``."""
+    w = _expand_key(key)
+    nr = len(key) // 4 + 6
+    prev = iv
+    out = bytearray()
+    for off in range(0, len(data), 16):
+        blk = data[off : off + 16]
+        out += bytes(x ^ y for x, y in zip(_inv_cipher_block(blk, w, nr), prev))
+        prev = blk
+    return out
+
+
 def aes_decrypt_cbc(key: bytes, data: bytes) -> Optional[bytes]:
     """PDF AES layout: IV = first 16 bytes; PKCS#7 padding stripped.
     None on malformed length/padding."""
     if len(data) < 32 or len(data) % 16:
         return None
-    w = _expand_key(key)
-    nr = len(key) // 4 + 6
-    prev = data[:16]
-    out = bytearray()
-    for off in range(16, len(data), 16):
-        blk = data[off : off + 16]
-        dec = _inv_cipher_block(blk, w, nr)
-        out += bytes(x ^ y for x, y in zip(dec, prev))
-        prev = blk
+    out = _cbc_decrypt(key, data[:16], data[16:])
     pad = out[-1]
     if not 1 <= pad <= 16 or len(out) < pad:
         return None
@@ -185,17 +203,8 @@ def aes_decrypt_cbc(key: bytes, data: bytes) -> Optional[bytes]:
 def aes_encrypt_cbc(key: bytes, iv: bytes, data: bytes) -> bytes:
     """Forward CBC with PKCS#7 padding, IV prepended (the PDF layout) —
     used by the corpus/test encryptor."""
-    w = _expand_key(key)
-    nr = len(key) // 4 + 6
     pad = 16 - len(data) % 16
-    data = data + bytes([pad]) * pad
-    prev = iv
-    out = bytearray(iv)
-    for off in range(0, len(data), 16):
-        blk = bytes(x ^ y for x, y in zip(data[off : off + 16], prev))
-        prev = _cipher_block(blk, w, nr)
-        out += prev
-    return bytes(out)
+    return iv + _cbc_encrypt(key, iv, data + bytes([pad]) * pad)
 
 
 def aes_decrypt_cbc_noiv(key: bytes, data: bytes) -> Optional[bytes]:
@@ -203,31 +212,13 @@ def aes_decrypt_cbc_noiv(key: bytes, data: bytes) -> Optional[bytes]:
     unwrap (ISO 32000-2 §7.6.4.4.8)."""
     if len(data) % 16 or not data:
         return None
-    w = _expand_key(key)
-    nr = len(key) // 4 + 6
-    prev = b"\x00" * 16
-    out = bytearray()
-    for off in range(0, len(data), 16):
-        blk = data[off : off + 16]
-        out += bytes(
-            x ^ y for x, y in zip(_inv_cipher_block(blk, w, nr), prev)
-        )
-        prev = blk
-    return bytes(out)
+    return bytes(_cbc_decrypt(key, bytes(16), data))
 
 
 def aes_encrypt_cbc_noiv(key: bytes, data: bytes) -> bytes:
     """Forward zero-IV no-padding CBC (corpus-side /UE wrap)."""
     assert len(data) % 16 == 0
-    w = _expand_key(key)
-    nr = len(key) // 4 + 6
-    prev = b"\x00" * 16
-    out = bytearray()
-    for off in range(0, len(data), 16):
-        blk = bytes(x ^ y for x, y in zip(data[off : off + 16], prev))
-        prev = _cipher_block(blk, w, nr)
-        out += prev
-    return bytes(out)
+    return _cbc_encrypt(key, bytes(16), data)
 
 
 # --- standard security handler key derivation ------------------------------
@@ -290,7 +281,7 @@ def _r6_hash(password: bytes, salt: bytes, udata: bytes = b"") -> bytes:
     i = 0
     while True:
         k1 = (password + k + udata) * 64
-        e = aes_encrypt_cbc_noiv_k2(k[:16], k[16:32], k1)
+        e = _cbc_encrypt(k[:16], k[16:32], k1)
         mod = sum(e[:16]) % 3
         if mod == 0:
             k = hashlib.sha256(e).digest()
@@ -302,20 +293,6 @@ def _r6_hash(password: bytes, salt: bytes, udata: bytes = b"") -> bytes:
         if i >= 64 and e[-1] <= i - 32:
             break
     return k[:32]
-
-
-def aes_encrypt_cbc_noiv_k2(key: bytes, iv: bytes, data: bytes) -> bytes:
-    """CBC encrypt with an explicit IV, no padding, IV NOT prepended —
-    the 2.B inner hash step (data length is already a block multiple)."""
-    w = _expand_key(key)
-    nr = len(key) // 4 + 6
-    prev = iv
-    out = bytearray()
-    for off in range(0, len(data), 16):
-        blk = bytes(x ^ y for x, y in zip(data[off : off + 16], prev))
-        prev = _cipher_block(blk, w, nr)
-        out += prev
-    return bytes(out)
 
 
 def r6_verify_empty_user(u: bytes, ue: bytes):

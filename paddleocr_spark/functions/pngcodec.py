@@ -5,9 +5,9 @@ The reference's ``DecodeImage`` actually decodes bytes
 None-on-bad-bytes contract). cv2/PIL are not in this container, so this
 module vendors the subset of PNG (ISO/IEC 15948) a deterministic CI decode
 branch needs: signature + chunk walk, IHDR, PLTE, concatenated IDAT zlib
-inflate, and all five row filters (None/Sub/Up/Average/Paeth — the same
-filter algebra as realpdf.py's PNG /Predictor support, re-stated over
-per-image bpp rather than the predictor's fixed colors). Supported: bit
+inflate, and all five row filters (None/Sub/Up/Average/Paeth —
+``unfilter`` below, which realpdf.py's PNG /Predictor decode reuses with
+the predictor's colors as bpp). Supported: bit
 depth 8, color types 0/2/3/4/6, non-interlaced. Anything else (16-bit,
 Adam7, malformed chunks, truncated/corrupt zlib) returns None and the
 caller degrades to the stub — decode failures never raise.
@@ -90,41 +90,10 @@ def decode_png(payload: bytes):
     stride = width * bpp
     if len(raw) != (stride + 1) * height:
         return None
-    rows: List[bytearray] = []
-    prev = bytearray(stride)
-    off = 0
-    for _y in range(height):
-        ft = raw[off]
-        cur = bytearray(raw[off + 1 : off + 1 + stride])
-        off += 1 + stride
-        if ft == 1:  # Sub
-            for i in range(bpp, stride):
-                cur[i] = (cur[i] + cur[i - bpp]) & 0xFF
-        elif ft == 2:  # Up
-            for i in range(stride):
-                cur[i] = (cur[i] + prev[i]) & 0xFF
-        elif ft == 3:  # Average
-            for i in range(stride):
-                left = cur[i - bpp] if i >= bpp else 0
-                cur[i] = (cur[i] + ((left + prev[i]) >> 1)) & 0xFF
-        elif ft == 4:  # Paeth
-            for i in range(stride):
-                a = cur[i - bpp] if i >= bpp else 0
-                b = prev[i]
-                c = prev[i - bpp] if i >= bpp else 0
-                p = a + b - c
-                pa, pb, pc = abs(p - a), abs(p - b), abs(p - c)
-                if pa <= pb and pa <= pc:
-                    pr = a
-                elif pb <= pc:
-                    pr = b
-                else:
-                    pr = c
-                cur[i] = (cur[i] + pr) & 0xFF
-        elif ft != 0:
-            return None  # filter type out of range
-        prev = cur
-        rows.append(cur)
+    flat = unfilter(raw, bpp, stride)
+    if flat is None:
+        return None
+    rows = [flat[y * stride : (y + 1) * stride] for y in range(height)]
     if color_type == 3:
         resolved = []
         pmax = len(plte) // 3
@@ -139,6 +108,43 @@ def decode_png(payload: bytes):
         rows = resolved
         color_type = 2
     return width, height, color_type, rows
+
+
+def unfilter(data: bytes, bpp: int, stride: int) -> Optional[bytearray]:
+    """Undo PNG row filters (ISO/IEC 15948 §9): ``data`` is rows of one
+    filter-type byte + ``stride`` filtered bytes, ``bpp`` bytes per pixel.
+    → the unfiltered rows concatenated; None when the length is not a
+    whole number of rows or a row type is > 4."""
+    if len(data) % (stride + 1):
+        return None
+    prior = bytearray(stride)
+    out = bytearray()
+    for r0 in range(0, len(data), stride + 1):
+        ft = data[r0]
+        row = bytearray(data[r0 + 1 : r0 + 1 + stride])
+        if ft == 1:  # Sub
+            for i in range(bpp, stride):
+                row[i] = (row[i] + row[i - bpp]) & 0xFF
+        elif ft == 2:  # Up
+            for i in range(stride):
+                row[i] = (row[i] + prior[i]) & 0xFF
+        elif ft == 3:  # Average
+            for i in range(stride):
+                left = row[i - bpp] if i >= bpp else 0
+                row[i] = (row[i] + ((left + prior[i]) >> 1)) & 0xFF
+        elif ft == 4:  # Paeth
+            for i in range(stride):
+                a = row[i - bpp] if i >= bpp else 0
+                b = prior[i]
+                c = prior[i - bpp] if i >= bpp else 0
+                pv = a + b - c
+                pa, pb, pc = abs(pv - a), abs(pv - b), abs(pv - c)
+                row[i] = (row[i] + (a if pa <= pb and pa <= pc else b if pb <= pc else c)) & 0xFF
+        elif ft != 0:  # 0 = None; anything else is not a PNG filter type
+            return None
+        out += row
+        prior = row
+    return out
 
 
 def channel_means(decoded) -> Tuple[float, ...]:

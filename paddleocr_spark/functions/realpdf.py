@@ -44,6 +44,7 @@ from .pdflike import (
     merge_paragraph_lines,
     xy_cut,
 )
+from .pngcodec import unfilter
 from .textnorm import collapse_ws
 
 PDF_REAL_MAGIC = "%PDF-"
@@ -312,36 +313,8 @@ def _unpredict(data: bytes, pred: int, colors: int, columns: int) -> Optional[by
             for i in range(bpp, rowlen):
                 out[r0 + i] = (out[r0 + i] + out[r0 + i - bpp]) & 0xFF
         return bytes(out)
-    if len(data) % (rowlen + 1):
-        return None
-    prior = bytearray(rowlen)
-    out = bytearray()
-    for r0 in range(0, len(data), rowlen + 1):
-        ft = data[r0]
-        row = bytearray(data[r0 + 1 : r0 + 1 + rowlen])
-        if ft == 1:  # Sub
-            for i in range(bpp, rowlen):
-                row[i] = (row[i] + row[i - bpp]) & 0xFF
-        elif ft == 2:  # Up
-            for i in range(rowlen):
-                row[i] = (row[i] + prior[i]) & 0xFF
-        elif ft == 3:  # Average
-            for i in range(rowlen):
-                left = row[i - bpp] if i >= bpp else 0
-                row[i] = (row[i] + ((left + prior[i]) >> 1)) & 0xFF
-        elif ft == 4:  # Paeth
-            for i in range(rowlen):
-                a = row[i - bpp] if i >= bpp else 0
-                b = prior[i]
-                c = prior[i - bpp] if i >= bpp else 0
-                pv = a + b - c
-                pa, pb, pc = abs(pv - a), abs(pv - b), abs(pv - c)
-                row[i] = (row[i] + (a if pa <= pb and pa <= pc else b if pb <= pc else c)) & 0xFF
-        elif ft != 0:  # 0 = None; anything else is not a PNG filter type
-            return None
-        out += row
-        prior = row
-    return bytes(out)
+    out = unfilter(data, bpp, rowlen)
+    return None if out is None else bytes(out)
 
 
 def _lzw_decode(data: bytes, early: int = 1) -> Optional[bytes]:
@@ -364,7 +337,8 @@ def _lzw_decode(data: bytes, early: int = 1) -> Optional[bytes]:
             i += 1
             nbits += 8
         nbits -= width
-        code = (acc >> nbits) & ((1 << width) - 1)
+        code = acc >> nbits
+        acc &= (1 << nbits) - 1  # keep only unread bits: linear, not quadratic
         if code == 257:
             return bytes(out)
         if code == 256:

@@ -898,11 +898,11 @@ def _rpdf_pred_params(p):
 
 
 def _rpdf_lzw(data: bytes, early: int):
-    """Oracle LZW (ISO 32000 §7.4.4) — whole-stream big-int bit reader and a
-    dict code table (the kernel streams a byte accumulator over a list).
-    EOD required; out-of-table code (non-KwKwK) → None."""
+    """Oracle LZW (ISO 32000 §7.4.4) — random-access bit reader (each code
+    is cut from the 3-byte window at its bit offset) and a dict code table
+    (the kernel streams a byte accumulator over a list). EOD required;
+    out-of-table code (non-KwKwK) → None."""
     total = len(data) * 8
-    big = int.from_bytes(data, "big")
     pos = 0
     width = 9
     table = {c: bytes([c]) for c in range(256)}
@@ -912,7 +912,8 @@ def _rpdf_lzw(data: bytes, early: int):
     while True:
         if pos + width > total:
             return None
-        code = (big >> (total - pos - width)) & ((1 << width) - 1)
+        win = int.from_bytes(data[pos >> 3 : (pos >> 3) + 3].ljust(3, b"\0"), "big")
+        code = (win >> (24 - (pos & 7) - width)) & ((1 << width) - 1)
         pos += width
         if code == 257:
             return b"".join(chunks)
