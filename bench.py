@@ -36,12 +36,12 @@ from pyspark.sql import functions as F
 
 from paddleocr_spark.corpus import (
     BASE_TURNS,
-    CORPUS_VERSION,
     SKEW_FACTOR,
     SKEW_MOD,
     transcripts_df,
 )
 from paddleocr_spark.operators.extract import extract
+from paddleocr_spark.plans.flagship import _tag
 from paddleocr_spark.session import get_spark
 
 
@@ -55,11 +55,10 @@ def main() -> None:
     reps = int(os.environ.get("BENCH_REPS", "10"))
     sf = sf_dir.rstrip("/").rsplit("sf", 1)[-1]
     corpus_root = os.environ.get("BENCH_CORPUS_DIR", "/tmp/paddleocr_spark_bench")
-    # keyed by CORPUS_VERSION: a corpus-generation change (e.g. v3's real-PDF
-    # payloads) must regenerate, never silently reuse an older mix
-    corpus_path = os.path.join(
-        corpus_root, f"corpus_v{CORPUS_VERSION}_sf{sf}_r{reps}.parquet"
-    )
+    # keyed like flagship's cache (corpus version, sf dir, reps and the
+    # size/mtime of documents.parquet): a corpus-generation change or a
+    # replaced source file must regenerate, never silently reuse an old mix
+    corpus_path = os.path.join(corpus_root, f"corpus_{_tag(sf_dir, reps)}.parquet")
 
     spark = get_spark("bench", cores=cpus)
 

@@ -44,10 +44,6 @@ class ExtractConfig:
     footer_y: int = 950             # blocks fully below this line are footer → drop
     y_band: int = 10                # banded reading-order quantum (10px tolerance)
     xy_min_gap: int = 1             # minimum projection gap that splits a region
-    merge_fragments: bool = False   # fixpoint merge of adjacent fragments
-                                    # (merge_fragmented analog,
-                                    # tools/infer/utility.py:980-1027); off by
-                                    # default to keep golden fixtures stable
 
     # -- paragraph merge (check_merge_method / convert_text_space_head/tail
     #    analog, ppstructure/recovery/recovery_to_markdown.py:23-126).
@@ -67,21 +63,6 @@ class ExtractConfig:
     #    spans with the inner content preserved verbatim). Off by default:
     #    goldens unchanged, mirroring the reference's --formula flag.
     detect_formula: bool = False
-
-    # -- real-PDF invisible text (SPEC §3b Text render mode, v9). Mode-3
-    #    (Tr 3) text is the OCR-text-layer of scanned pages — extracted by
-    #    default, exactly what this engine exists to read. True = suppress
-    #    it (each suppressed show op with a string operand counts dropped).
-    drop_invisible_text: bool = False
-
-    # -- real-PDF marked content (SPEC §3b Marked content, v24). Content
-    #    inside an /Artifact marked-content level (ISO 32000 §14.8.2.2.2:
-    #    pagination headers/footers, decorations — "not part of the
-    #    author's original content") is suppressed by default — the
-    #    PDF-side analog of the HTML nav/header/footer boilerplate rule.
-    #    True = keep artifact text (each suppressed show op counts dropped
-    #    when False, the invisible-text accounting rule).
-    keep_artifact_text: bool = False
 
     # -- assembly --
     para_sep: str = "\n\n"

@@ -166,57 +166,6 @@ def layout_walk(boxes: List[Box], page_w: int) -> List[Tuple[Box, str]]:
     return out
 
 
-def merge_fragments(
-    boxes: List[Box], y_tol: int = 10, x_gap: int = 10
-) -> List[Box]:
-    """Fixpoint merge of horizontally adjacent fragments.
-
-    The ``merge_fragmented`` analog (/root/reference/tools/infer/utility.py:
-    980-1027): two boxes merge when their y-extents align within ``y_tol`` and
-    the horizontal gap between them is ≤ ``x_gap``; repeat until no pair
-    merges. Merged text joins left→right with a single space; the merged box
-    is the bounding union and keeps the smaller line_idx (stable tie-break).
-    O(n²) per fixpoint pass but n is per-turn block count (≤ dozens) — this
-    runs inside the per-payload kernel, never across rows.
-    """
-    cur = sorted(boxes, key=lambda b: (b[0], b[4]))  # left-to-right, stable
-    changed = True
-    while changed:
-        changed = False
-        out: List[Box] = []
-        used = [False] * len(cur)
-        for i, b in enumerate(cur):
-            if used[i]:
-                continue
-            a = b
-            grew = True
-            while grew:  # greedily extend rightward past interleaved rows
-                grew = False
-                for j in range(i + 1, len(cur)):
-                    if used[j]:
-                        continue
-                    c = cur[j]
-                    if (
-                        abs(a[1] - c[1]) <= y_tol
-                        and abs(a[3] - c[3]) <= y_tol
-                        and 0 <= c[0] - a[2] <= x_gap
-                    ):
-                        a = (
-                            a[0],
-                            min(a[1], c[1]),
-                            max(a[2], c[2]),
-                            max(a[3], c[3]),
-                            min(a[4], c[4]),
-                            a[5] + " " + c[5],
-                        )
-                        used[j] = True
-                        grew = True
-                        changed = True
-            out.append(a)
-        cur = out
-    return cur
-
-
 def merge_paragraph_lines(ordered: List[Box], cfg: ExtractConfig = DEFAULT_CONFIG) -> List[Box]:
     """Group consecutive ordered lines into paragraphs — the
     ``check_merge_method`` / ``convert_text_space_head`` / ``_tail`` analog
@@ -237,8 +186,7 @@ def merge_paragraph_lines(ordered: List[Box], cfg: ExtractConfig = DEFAULT_CONFI
                                                  the paragraph (tail rule)
 
     Merged text joins left→right with a single space; the box is the union;
-    line_idx is the first line's (stable tie-break, same convention as
-    merge_fragments)."""
+    line_idx is the first line's (stable tie-break)."""
     out: List[Box] = []
     cur: List[Box] = []
     for b in ordered:
@@ -294,8 +242,6 @@ def pdflike_spans(text: str, cfg: ExtractConfig = DEFAULT_CONFIG):
     spans = []
     for page in sorted(by_page):
         page_boxes = by_page[page]
-        if cfg.merge_fragments:
-            page_boxes = merge_fragments(page_boxes, y_tol=cfg.y_band, x_gap=cfg.y_band)
         if cfg.layout_mode == "walk":
             ordered = [b for b, _lay in layout_walk(page_boxes, cfg.page_w)]
         else:

@@ -40,7 +40,6 @@ from ..config import ExtractConfig, DEFAULT_CONFIG
 from .pdflike import (
     Box,
     layout_walk,
-    merge_fragments,
     merge_paragraph_lines,
     xy_cut,
 )
@@ -1994,46 +1993,6 @@ def _xobject_table(text: str, objs: dict, vobjs: dict, res) -> dict:
     return dict(_name_ref_pairs(xdict))
 
 
-def _key_float(body: str, key: str) -> Optional[float]:
-    """Plain number after the key's FIRST token-exact occurrence (v52 —
-    the float twin of ``_key_int``; /ca values are reals in 0..1)."""
-    k = body.find(key)
-    if k < 0:
-        return None
-    after = k + len(key)
-    if after < len(body) and body[after] not in _WS and body[after] not in _DELIM:
-        return None
-    i = _skip_ws(body, after)
-    m = _RUN_RE.match(body, i)
-    if m is None or not _NUM_RE.match(m.group(0)):
-        return None
-    return float(m.group(0))
-
-
-def _egs_table(text: str, objs: dict, vobjs: dict, res) -> dict:
-    """Resolved /Resources dict body → {graphics-state name: fill alpha}
-    via /ExtGState (v52, ISO §8.4.5): ``name → N 0 R`` pairs whose
-    target body carries a token-exact ``/ca`` number. Entries without a
-    parseable /ca are absent (a ``gs`` on them changes nothing —
-    ISO: a gs dict updates only the parameters present). Inline
-    ``<< … >>`` entry values are not resolved (the _name_ref_pairs
-    ref-only walk — pinned; real writers emit refs)."""
-    if res is None:
-        return {}
-    gdict = _key_dict_body(res, "/ExtGState", text, objs, vobjs)
-    if gdict is None:
-        return {}
-    out = {}
-    for nm, num in _name_ref_pairs(gdict):
-        gb = _obj_body(text, objs, vobjs, num)
-        if gb is None:
-            continue
-        ca = _key_float(gb, "/ca")
-        if ca is not None:
-            out[nm] = ca
-    return out
-
-
 def _subtype_name(params: str) -> Optional[str]:
     """The FIRST ``/Subtype`` name in ``params`` (token-exact key, ws*,
     ``/name`` value), or None."""
@@ -2283,7 +2242,6 @@ def _make_form_resolver(
             _matrix6(params),
             _oc_hidden_names(text, objs, vobjs, res_f, off),
             bbox,
-            _egs_table(text, objs, vobjs, res_f),  # v52
         )
         cache[num] = entry
         return entry
@@ -2552,10 +2510,9 @@ def _interpret(content: str, mb_w: float, mb_h: float,
                ctm: Tuple[float, ...] = _IDENT,
                ocnames: frozenset = frozenset(),
                bbox: Optional[Tuple[float, float, float, float]] = None,
-               egs: Optional[dict] = None,
                ) -> Tuple[List[Box], int]:
     """One content stream → (line boxes in canonical top-left coordinates,
-    n suppressed invisible show ops). ``fonts`` maps font names to CMap
+    n suppressed /Artifact show ops). ``fonts`` maps font names to CMap
     entries (SPEC §3b Fonts, v6): ``Tf`` switches the active map and
     show-strings decode through it (advance widths use the DECODED length,
     so an encoded page lays out exactly like its plain twin). ``xobjs`` +
@@ -2584,8 +2541,6 @@ def _interpret(content: str, mb_w: float, mb_h: float,
     x = y = 0.0
     leading = 0.0
     fontsize = 12.0
-    mode = 0.0  # text render mode (Tr, v9); 3 and 7 paint nothing (v43)
-    alpha0 = False  # v52: fill alpha 0 via gs /ca (invisible like Tr 3)
     charspace = 0.0  # Tc (v11); persists across BT like fontsize
     wordspace = 0.0  # Tw (v11)
     hscale = 100.0  # Tz percent (v12); scales the whole advance, ISO §9.3.4
@@ -2657,7 +2612,7 @@ def _interpret(content: str, mb_w: float, mb_h: float,
                 and not (clip[0] <= _px <= clip[2] and clip[1] <= _py <= clip[3])
             ):
                 txt = ""  # clipped: paints nothing (not counted —
-                # geometry, not a render mode; the buffer still resets)
+                # geometry, not a suppressed show; the buffer still resets)
         if txt.strip():
             # v25: with no active width table the per-show accounting sums
             # telescope to the flush-time length formula EXACTLY (0.5 and
@@ -3033,14 +2988,13 @@ def _interpret(content: str, mb_w: float, mb_h: float,
                 if num is not None and num not in chain:
                     form = resolver(num)
                     if form is not None:
-                        fc, ff, fx, fmat, focn, fbb, fegs = form
+                        fc, ff, fx, fmat, focn, fbb = form
                         _b, sup = _interpret(
                             fc, mb_w, mb_h, cfg, ff, fx, resolver,
                             (ox, oy), depth + 1,
                             chain | {num}, boxes, rot,
                             ctm=_compose(fmat, ctm), ocnames=focn,
                             bbox=fbb,  # v49: the form clips to its BBox
-                            egs=fegs,  # v52: the form's own gs states
                         )  # crop already folded into (ox, oy); the form
                         # /Matrix composes with the CTM at Do (v20)
                         suppressed += sup
@@ -3049,9 +3003,9 @@ def _interpret(content: str, mb_w: float, mb_h: float,
             # params (ISO §8.4.2 places text state inside graphics state).
             # No flush: q itself changes nothing the flush reads.
             if len(gstack) < _GSTACK_MAX:
-                gstack.append((ctm, fontsize, cur_map, cur_wd, mode,
+                gstack.append((ctm, fontsize, cur_map, cur_wd,
                                charspace, wordspace, hscale, rise, leading,
-                               clip, alpha0))  # v51 clip; v52 alpha
+                               clip))  # v51 clip
             else:
                 gskip += 1
         elif tok == "Q":
@@ -3060,8 +3014,8 @@ def _interpret(content: str, mb_w: float, mb_h: float,
             elif gstack:
                 if in_text:
                     flush()  # restore changes what flush reads
-                (ctm, fontsize, cur_map, cur_wd, mode, charspace,
-                 wordspace, hscale, rise, leading, clip, alpha0) = gstack.pop()
+                (ctm, fontsize, cur_map, cur_wd, charspace,
+                 wordspace, hscale, rise, leading, clip) = gstack.pop()
             # unbalanced Q (empty stack): inert — the pinned degrade
         elif tok == "cm":
             v = nums(6)
@@ -3069,23 +3023,6 @@ def _interpret(content: str, mb_w: float, mb_h: float,
                 if in_text:
                     flush()
                 ctm = _compose((v[0], v[1], v[2], v[3], v[4], v[5]), ctm)
-        elif tok == "gs":
-            # v52: ExtGState dispatch (ISO §8.4.5) — only the /ca fill
-            # alpha matters to text extraction: alpha 0 is the hidden-
-            # layer trick (invisible exactly like Tr 3 under
-            # drop_invisible_text; extracted by default, the OCR-layer
-            # analog). A name without a /ca entry changes nothing (a gs
-            # dict updates only the parameters present); /CA (stroke
-            # alpha) is ignored — pinned, fill modes dominate real text.
-            if (
-                egs
-                and stack
-                and isinstance(stack[-1], tuple)
-                and stack[-1][0] == "n"
-            ):
-                ca = egs.get(stack[-1][1])
-                if ca is not None:
-                    alpha0 = ca == 0.0
         elif tok == "re":
             # v51: record the path rect (LAST re wins, pinned); a rect
             # drawn under a changed CTM is unknown-space → None
@@ -3200,9 +3137,6 @@ def _interpret(content: str, mb_w: float, mb_h: float,
             elif tok == "TL":
                 if stack and isinstance(stack[-1], float):
                     leading = stack[-1]
-            elif tok == "Tr":
-                if stack and isinstance(stack[-1], float):
-                    mode = stack[-1]
             elif tok == "Tc":
                 if stack and isinstance(stack[-1], float):
                     charspace = stack[-1]
@@ -3225,9 +3159,7 @@ def _interpret(content: str, mb_w: float, mb_h: float,
                 y -= leading
             elif tok == "Tj":
                 if stack and isinstance(stack[-1], tuple) and stack[-1][0] == "s":
-                    if cfg.drop_invisible_text and (mode == 3 or mode == 7 or alpha0):
-                        suppressed += 1
-                    elif art_depth and not cfg.keep_artifact_text:
+                    if art_depth:
                         suppressed += 1  # v24: /Artifact suppression
                     elif at_text is not None:
                         if not at_consumed:  # v24: first show emits the
@@ -3253,9 +3185,7 @@ def _interpret(content: str, mb_w: float, mb_h: float,
                         charspace = stack[-2]
                     flush()
                     y -= leading
-                    if cfg.drop_invisible_text and (mode == 3 or mode == 7 or alpha0):
-                        suppressed += 1
-                    elif art_depth and not cfg.keep_artifact_text:
+                    if art_depth:
                         suppressed += 1  # v24: /Artifact suppression
                     elif at_text is not None:
                         if not at_consumed:
@@ -3271,10 +3201,7 @@ def _interpret(content: str, mb_w: float, mb_h: float,
                         isinstance(el, tuple) and el[0] == "s"
                         for el in stack[-1][1]
                     )
-                    if cfg.drop_invisible_text and (mode == 3 or mode == 7 or alpha0):
-                        if has_str:
-                            suppressed += 1
-                    elif art_depth and not cfg.keep_artifact_text:
+                    if art_depth:
                         if has_str:
                             suppressed += 1  # v24: /Artifact suppression
                     elif at_text is not None:
@@ -3458,7 +3385,6 @@ def _content_resources(text: str):
         and "Courier" not in text
         and "/DescendantFonts" not in text  # v33: CID /W width arrays
         and "/OCProperties" not in text  # v36: optional-content OFF layers
-        and "/ExtGState" not in text  # v52: alpha-0 graphics states
         and text.count("/MediaBox") < 2
         and not _CONTENTS_ARR_RE.search(text)
     ):
@@ -3475,7 +3401,6 @@ def _content_resources(text: str):
     want_crop = "/CropBox" in text  # v19: gates the extra geometry walk
     want_annots = "/Annots" in text  # v27
     want_oc = "/OCProperties" in text  # v36: optional content
-    want_egs = "/ExtGState" in text  # v52: gs fill-alpha states
     off = _off_ocgs(text, objs, vobjs) if want_oc else frozenset()
     by_content: dict = {}
     part_of: dict = {}
@@ -3501,16 +3426,15 @@ def _content_resources(text: str):
             cached = (
                 _font_table(text, objs, vobjs, res_p),
                 _xobject_table(text, objs, vobjs, res_p) if want_xobj else {},
-                _egs_table(text, objs, vobjs, res_p) if want_egs else {},
                 _oc_hidden_names(text, objs, vobjs, res_p, off)
                 if want_oc
                 else frozenset(),
             )
             res_cache[res_p] = cached
-        fonts, xobjs, egs, och = cached
+        fonts, xobjs, och = cached
         geo = _page_geometry(text, objs, vobjs, body, dflt, want_crop)
         annots = _page_annots(text, objs, vobjs, body) if want_annots else ()
-        entry = (fonts, xobjs, geo, annots, och, egs)
+        entry = (fonts, xobjs, geo, annots, och)
         if len(refs) == 1:
             by_content[refs[0]] = entry
             keys_of_page[num] = refs[0]
@@ -3938,10 +3862,10 @@ def parse_realpdf(text: str, cfg: ExtractConfig = DEFAULT_CONFIG):
                 resolver is not None and "Do" in content
             ):
                 continue
-            fonts, xobjs, (pw, ph, rot, cx, cy), annots, och, egs = entry
+            fonts, xobjs, (pw, ph, rot, cx, cy), annots, och = entry
             boxes, suppressed = _interpret(
                 content, pw, ph, cfg, fonts, xobjs, resolver, rot=rot,
-                crop=(cx, cy), ocnames=och, egs=egs,
+                crop=(cx, cy), ocnames=och,
             )
             skipped += suppressed
             if annots:  # v27: annotation boxes follow the content boxes
@@ -3978,14 +3902,13 @@ def parse_realpdf(text: str, cfg: ExtractConfig = DEFAULT_CONFIG):
         pw, ph, rot, cx, cy = mb_w, mb_h, 0, 0.0, 0.0
         annots = ()
         och = frozenset()
-        egs = {}
         if res_by_obj and onum is not None:
             entry = res_by_obj.get(onum)
             if entry is not None:
-                fonts, xobjs, (pw, ph, rot, cx, cy), annots, och, egs = entry
+                fonts, xobjs, (pw, ph, rot, cx, cy), annots, och = entry
         boxes, suppressed = _interpret(
             content, pw, ph, cfg, fonts, xobjs, resolver, rot=rot,
-            crop=(cx, cy), ocnames=och, egs=egs,
+            crop=(cx, cy), ocnames=och,
         )
         skipped += suppressed
         if annots:  # v27: annotation boxes follow the content boxes
@@ -4028,8 +3951,6 @@ def realpdf_spans(text: str, cfg: ExtractConfig = DEFAULT_CONFIG):
     spans = []
     for page in sorted(by_page):
         page_boxes = by_page[page]
-        if cfg.merge_fragments:
-            page_boxes = merge_fragments(page_boxes, y_tol=cfg.y_band, x_gap=cfg.y_band)
         if cfg.layout_mode == "walk":
             ordered = [b for b, _lay in layout_walk(page_boxes, cfg.page_w)]
         else:

@@ -2320,33 +2320,6 @@ def _rpdf_oc_hidden(
     return frozenset(hidden)
 
 
-_RPDF_CAKEY_RE = re.compile(
-    r"/ca(?=[\x00\t\n\x0c\r ()<>\[\]{}/%]|$)[\x00\t\n\x0c\r ]*"
-    r"([+-]?(?:\d+\.?\d*|\.\d+))(?=[\x00\t\n\x0c\r ()<>\[\]{}/%]|$)"
-)
-
-
-def _rpdf_egs_table(text: str, objs: dict, vobjs: dict, res):
-    """Mirror of the kernel /ExtGState rule (v52): name -> /ca fill
-    alpha for ref-valued entries whose body carries a token-exact /ca
-    number; other entries absent (a gs on them changes nothing)."""
-    gdict = _rpdf_key_dict(res, "/ExtGState", text, objs, vobjs) if res else None
-    if gdict is None:
-        return {}
-    out = {}
-    for fm in _RPDF_FONTENT_RE.finditer(gdict):
-        gb = _rpdf_obj_body(text, objs, vobjs, int(fm.group(2)))
-        if gb is None:
-            continue
-        k = gb.find("/ca")
-        if k < 0:
-            continue
-        m = _RPDF_CAKEY_RE.match(gb, k)
-        if m:
-            out[_rpdf_name_unescape(fm.group(1))] = float(m.group(1))
-    return out
-
-
 def _rpdf_form_bbox(params: str):
     """Normalized form /BBox (v49, ISO §8.10.1): first token-exact key
     with an inline 4-number array; absent/malformed -> None (no clip)."""
@@ -2403,9 +2376,6 @@ def _rpdf_form_resolver(
             _rpdf_matrix6(params),
             _rpdf_oc_hidden(text, objs, vobjs, res_f, off),
             _rpdf_form_bbox(params),  # v49: the form clips to its BBox
-            _rpdf_egs_table(text, objs, vobjs, res_f),  # v57: form-level
-            # /ExtGState — gs inside a Form XObject resolves through the
-            # form's own resources (ISO §8.10.2), matching the kernel
         )
         cache[num] = entry
         return entry
@@ -2772,7 +2742,6 @@ def _rpdf_content_resources(text: str):
         and "Courier" not in text
         and "/DescendantFonts" not in text  # v33: CID /W width arrays
         and "/OCProperties" not in text  # v36: optional-content OFF layers
-        and "/ExtGState" not in text  # v52: alpha-0 graphics states
         and text.count("/MediaBox") < 2
         and not _RPDF_CONTENTS_ARR_RE.search(text)
     ):
@@ -2819,12 +2788,7 @@ def _rpdf_content_resources(text: str):
             if want_oc
             else frozenset()
         )
-        egs = (
-            _rpdf_egs_table(text, objs, vobjs, res_p)
-            if "/ExtGState" in text
-            else {}
-        )
-        entry = (fonts, xobjs, geo, annots, och, egs)
+        entry = (fonts, xobjs, geo, annots, och)
         if len(refs) == 1:
             by_content[refs[0]] = entry
             keys_of_page[num] = refs[0]
@@ -3197,9 +3161,9 @@ def _rpdf_interpret(toks, mb_w: float, mb_h: float, cfg: ExtractConfig,
                     fonts=None, xobjs=None, resolver=None, off=(0.0, 0.0),
                     depth=0, chain=frozenset(), boxes=None, rot=0,
                     crop=(0.0, 0.0), ctm=_RPDF_IDENT, ocnames=frozenset(),
-                    bbox=None, egs=None):
+                    bbox=None):
     """Pass 2: token list → (line boxes in canonical top-left coordinates,
-    n suppressed invisible show ops). ``fonts``: name → CMap entry; Tf
+    n suppressed /Artifact show ops). ``fonts``: name → CMap entry; Tf
     switches the active map (SPEC §3b Fonts, v6) and show-strings decode
     through it. ``xobjs``/``resolver``/``off``/``depth``/``chain``: form
     XObject invocation via Do (SPEC §3b, v9), recursing over the form's
@@ -3218,7 +3182,7 @@ def _rpdf_interpret(toks, mb_w: float, mb_h: float, cfg: ExtractConfig,
     ox -= crop[0]
     oy -= crop[1]
     state = {"x": 0.0, "y": 0.0, "lead": 0.0, "fs": 12.0, "in": False,
-             "mode": 0.0, "sup": 0, "tc": 0.0, "tw": 0.0, "a0": False,
+             "sup": 0, "tc": 0.0, "tw": 0.0,
              "tz": 100.0, "rise": 0.0,
              # v25 advance accounting: units / glyphs / space-codes
              "au": 0.0, "ag": 0, "asp": 0}
@@ -3240,11 +3204,6 @@ def _rpdf_interpret(toks, mb_w: float, mb_h: float, cfg: ExtractConfig,
     buf = []
     stack = []
     arr = None
-
-    def invisible():
-        return cfg.drop_invisible_text and (
-            state["mode"] in (3, 7) or state["a0"]
-        )
 
     ctm0 = ctm  # v49: form-space clip runs only while the interior CTM
     # is still the entry tuple (cm re-binds; q/Q restore the same object)
@@ -3408,14 +3367,13 @@ def _rpdf_interpret(toks, mb_w: float, mb_h: float, cfg: ExtractConfig,
                 if num is not None and num not in chain:
                     form = resolver(num)
                     if form is not None:
-                        ftoks, ff, fx, fmat, focn, fbb, fegs = form
+                        ftoks, ff, fx, fmat, focn, fbb = form
                         _b, sup = _rpdf_interpret(
                             ftoks, mb_w, mb_h, cfg, ff, fx, resolver,
                             (ox, oy), depth + 1,
                             chain | {num}, boxes, rot,
                             ctm=_rpdf_compose(fmat, ctmb[0]), ocnames=focn,
                             bbox=fbb,  # v49
-                            egs=fegs,  # v57: the form's own gs states
                         )
                         state["sup"] += sup
         elif op == "q":
@@ -3423,9 +3381,9 @@ def _rpdf_interpret(toks, mb_w: float, mb_h: float, cfg: ExtractConfig,
             # changes nothing the flush reads
             if len(gstack) < _RPDF_GSTACK_MAX:
                 gstack.append((ctmb[0], cmap[0], wdb[0], state["fs"],
-                               state["mode"], state["tc"], state["tw"],
+                               state["tc"], state["tw"],
                                state["tz"], state["rise"], state["lead"],
-                               clipb[0], state["a0"]))  # v51 clip; v52
+                               clipb[0]))  # v51 clip
             else:
                 gskip[0] += 1
         elif op == "Q":
@@ -3434,10 +3392,10 @@ def _rpdf_interpret(toks, mb_w: float, mb_h: float, cfg: ExtractConfig,
             elif gstack:
                 if state["in"]:
                     flush()
-                (ctmb[0], cmap[0], wdb[0], fs, mode, tc, tw, tz, rise,
-                 lead, clipb[0], a0) = gstack.pop()
-                state.update(fs=fs, mode=mode, tc=tc, tw=tw, tz=tz,
-                             rise=rise, lead=lead, a0=a0)
+                (ctmb[0], cmap[0], wdb[0], fs, tc, tw, tz, rise,
+                 lead, clipb[0]) = gstack.pop()
+                state.update(fs=fs, tc=tc, tw=tw, tz=tz,
+                             rise=rise, lead=lead)
             # unbalanced Q: inert (pinned degrade)
         elif op == "cm":
             v = tail_nums(6)
@@ -3445,14 +3403,6 @@ def _rpdf_interpret(toks, mb_w: float, mb_h: float, cfg: ExtractConfig,
                 if state["in"]:
                     flush()
                 ctmb[0] = _rpdf_compose(tuple(v), ctmb[0])
-        elif op == "gs":
-            # v52 mirror: /ca fill alpha via the page/form ExtGState
-            # table; alpha 0 = invisible like Tr 3; names without a
-            # /ca entry change nothing; /CA ignored (pinned)
-            if egs and stack and stack[-1][0] == "name":
-                ca = egs.get(stack[-1][1])
-                if ca is not None:
-                    state["a0"] = ca == 0.0
         elif op == "re":
             # v51: LAST re of the path wins; changed-CTM rects are
             # unknown-space -> None (the v49 entry-CTM rule)
@@ -3543,8 +3493,6 @@ def _rpdf_interpret(toks, mb_w: float, mb_h: float, cfg: ExtractConfig,
                     state["y"] += v[1]
             elif op == "TL" and stack and stack[-1][0] == "num":
                 state["lead"] = stack[-1][1]
-            elif op == "Tr" and stack and stack[-1][0] == "num":
-                state["mode"] = stack[-1][1]
             elif op == "Tc" and stack and stack[-1][0] == "num":
                 state["tc"] = stack[-1][1]
             elif op == "Tw" and stack and stack[-1][0] == "num":
@@ -3562,9 +3510,7 @@ def _rpdf_interpret(toks, mb_w: float, mb_h: float, cfg: ExtractConfig,
                 flush()
                 state["y"] -= state["lead"]
             elif op == "Tj" and stack and stack[-1][0] == "str":
-                if invisible():
-                    state["sup"] += 1
-                elif art[0] and not cfg.keep_artifact_text:
+                if art[0]:
                     state["sup"] += 1  # v24: /Artifact suppression
                 elif atx[0] is not None:
                     if not atx[1]:  # v24: first show emits the replacement
@@ -3585,9 +3531,7 @@ def _rpdf_interpret(toks, mb_w: float, mb_h: float, cfg: ExtractConfig,
                     state["tc"] = stack[-2][1]
                 flush()
                 state["y"] -= state["lead"]
-                if invisible():
-                    state["sup"] += 1
-                elif art[0] and not cfg.keep_artifact_text:
+                if art[0]:
                     state["sup"] += 1  # v24: /Artifact suppression
                 elif atx[0] is not None:
                     if not atx[1]:
@@ -3597,10 +3541,7 @@ def _rpdf_interpret(toks, mb_w: float, mb_h: float, cfg: ExtractConfig,
                     emit_show(stack[-1][1])
             elif op == "TJ" and stack and stack[-1][0] == "arr":
                 has_str = any(el[0] == "str" for el in stack[-1][1])
-                if invisible():
-                    if has_str:
-                        state["sup"] += 1
-                elif art[0] and not cfg.keep_artifact_text:
+                if art[0]:
                     if has_str:
                         state["sup"] += 1  # v24: /Artifact suppression
                 elif atx[0] is not None:
@@ -4129,10 +4070,10 @@ def _oracle_realpdf(text: str, cfg: ExtractConfig):
                 resolver is not None and "Do" in content
             ):
                 continue
-            fonts, xobjs, (pw, ph, rot, cx, cy), annots, och, egs = entry
+            fonts, xobjs, (pw, ph, rot, cx, cy), annots, och = entry
             boxes, sup = _rpdf_interpret(
                 _rpdf_tokens(content), pw, ph, cfg, fonts, xobjs,
-                resolver, rot=rot, crop=(cx, cy), ocnames=och, egs=egs,
+                resolver, rot=rot, crop=(cx, cy), ocnames=och,
             )
             dropped += sup
             if annots:  # v27: annotation boxes follow the content boxes
@@ -4161,14 +4102,13 @@ def _oracle_realpdf(text: str, cfg: ExtractConfig):
         pw, ph, rot, cx, cy = mb_w, mb_h, 0, 0.0, 0.0
         annots = ()
         och = frozenset()
-        egs = {}
         if res_by_obj and onum is not None:
             entry = res_by_obj.get(onum)
             if entry is not None:
-                fonts, xobjs, (pw, ph, rot, cx, cy), annots, och, egs = entry
+                fonts, xobjs, (pw, ph, rot, cx, cy), annots, och = entry
         boxes, sup = _rpdf_interpret(
             _rpdf_tokens(content), pw, ph, cfg, fonts, xobjs, resolver,
-            rot=rot, crop=(cx, cy), ocnames=och, egs=egs,
+            rot=rot, crop=(cx, cy), ocnames=och,
         )
         dropped += sup
         if annots:  # v27: annotation boxes follow the content boxes

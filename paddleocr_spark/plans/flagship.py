@@ -15,30 +15,27 @@ import uuid
 from pyspark.sql import DataFrame, SparkSession
 
 from ..config import ExtractConfig, DEFAULT_CONFIG
-from ..corpus import transcripts_df
+from ..corpus import BASE_TURNS, CORPUS_VERSION, transcripts_df
+from ..golden import _cfg_digest
 from ..operators.extract import extract, ordered_output
 
 _CACHE_ROOT = "/tmp/paddleocr_spark_corpus_cache"
 
 
-def corpus_df(
-    spark: SparkSession, sf_dir: str, reps: int = 1, base_turns: int = 4
-) -> DataFrame:
+def corpus_df(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Deterministic transcript corpus, cached as parquet under /tmp.
 
-    The corpus is a pure function of (sf_dir documents, reps, base_turns), so
-    it is synthesized once and reused — repeated queries (the driver runs
-    each `queries()` entry separately) skip the generation pass. Written to a
+    The corpus is a pure function of the sf_dir documents, so it is
+    synthesized once and reused — repeated queries (each `queries()` entry
+    runs separately) skip the generation pass. Written to a
     temp dir then atomically renamed; falls back to direct generation if the
     cache dir is unusable."""
     return _cached(
-        spark,
-        f"corpus_{_tag(sf_dir, reps, base_turns)}",
-        lambda: transcripts_df(spark, sf_dir, reps=reps, base_turns=base_turns),
+        spark, f"corpus_{_tag(sf_dir)}", lambda: transcripts_df(spark, sf_dir)
     )
 
 
-def _tag(sf_dir: str, reps: int, base_turns: int, extra: str = "") -> str:
+def _tag(sf_dir: str, reps: int = 1, extra: str = "") -> str:
     """Cache key: path + params + a content fingerprint (size/mtime of
     documents.parquet) so a swapped source file invalidates the cache."""
     doc = os.path.join(sf_dir, "documents.parquet")
@@ -47,9 +44,7 @@ def _tag(sf_dir: str, reps: int, base_turns: int, extra: str = "") -> str:
         stamp = f"{st.st_size}:{st.st_mtime_ns}"
     except OSError:
         stamp = "missing"
-    from ..corpus import CORPUS_VERSION
-
-    key = f"v{CORPUS_VERSION}:{os.path.abspath(sf_dir)}:{reps}:{base_turns}:{stamp}:{extra}"
+    key = f"v{CORPUS_VERSION}:{os.path.abspath(sf_dir)}:{reps}:{BASE_TURNS}:{stamp}:{extra}"
     return hashlib.md5(key.encode()).hexdigest()[:16]
 
 
@@ -76,38 +71,18 @@ def _cached(spark: SparkSession, name: str, build) -> DataFrame:
         return build()
 
 
-def _cfg_digest(cfg: ExtractConfig) -> str:
-    import dataclasses
-    import json
-
-    d = dataclasses.asdict(cfg)
-    d["boiler_tags"] = sorted(d["boiler_tags"])
-    return hashlib.md5(json.dumps(d, sort_keys=True).encode()).hexdigest()[:12]
-
-
 def flagship(
     spark: SparkSession,
     sf_dir: str,
     cfg: ExtractConfig = DEFAULT_CONFIG,
-    reps: int = 1,
-    base_turns: int = 4,
     ordered: bool = True,
-    cache_extraction: bool = True,
 ) -> DataFrame:
-    """Full pipeline; with ``cache_extraction`` the extraction OUTPUT is also
-    cached (keyed by corpus tag + cfg digest, deterministic), so the several
-    flagship-derived driver queries pay the pandas-UDF pass once."""
-    if cache_extraction:
-        tag = _tag(sf_dir, reps, base_turns, extra=_cfg_digest(cfg))
-        out = _cached(
-            spark,
-            f"extract_{tag}",
-            lambda: extract(
-                corpus_df(spark, sf_dir, reps=reps, base_turns=base_turns), cfg=cfg
-            ),
-        )
-    else:
-        out = extract(
-            corpus_df(spark, sf_dir, reps=reps, base_turns=base_turns), cfg=cfg
-        )
+    """Full pipeline. The extraction OUTPUT is cached too (keyed by corpus
+    tag + cfg digest, deterministic), so the several flagship-derived
+    queries pay the pandas-UDF pass once."""
+    out = _cached(
+        spark,
+        f"extract_{_tag(sf_dir, extra=_cfg_digest(cfg))}",
+        lambda: extract(corpus_df(spark, sf_dir), cfg=cfg),
+    )
     return ordered_output(out) if ordered else out

@@ -11,9 +11,8 @@ cross-batch state, watermark, or ordering guarantee beyond keys in the row.
 Two modes:
 
 - ``extract_stream``     — direct: readStream → extract (salted repartition +
-  fused Arrow kernel; in-partition length sort is disabled — sorting an
-  unbounded stream is undefined) → writeStream parquet, exactly-once via the
-  streaming checkpoint.
+  fused Arrow kernel) → writeStream parquet, exactly-once via the streaming
+  checkpoint.
 - ``extract_foreach_batch`` — per-micro-batch delegation to the checkpointed
   batch sink, giving streaming ingestion the same bucket manifest / lineage
   metrics as the batch job (the Iceberg MERGE shape).

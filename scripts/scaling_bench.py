@@ -88,14 +88,12 @@ def main() -> None:
     args = ap.parse_args()
 
     sf = args.sf_dir.rstrip("/").rsplit("sf", 1)[-1]
-    # cache keyed by CORPUS_VERSION (same rule as bench.py): a corpus-definition
-    # change must never silently reuse a stale payload mix
+    # cache keyed by flagship's tag (same rule as bench.py): a corpus-definition
+    # change or a replaced documents.parquet must never reuse a stale payload mix
     sys.path.insert(0, ROOT)
-    from paddleocr_spark.corpus import CORPUS_VERSION
+    from paddleocr_spark.plans.flagship import _tag
 
-    corpus = (
-        f"/tmp/paddleocr_spark_bench/corpus_v{CORPUS_VERSION}_sf{sf}_r{args.reps}.parquet"
-    )
+    corpus = f"/tmp/paddleocr_spark_bench/corpus_{_tag(args.sf_dir, args.reps)}.parquet"
 
     subprocess.run([sys.executable, os.path.join(ROOT, "scripts", "package.py")], check=True)
     if not os.path.exists(os.path.join(corpus, "_SUCCESS")):

@@ -3,6 +3,9 @@
 Mirrors the reference's exact-expectation style
 (/root/reference/tests/test_french_accents.py:28-60)."""
 
+import functools
+from typing import Callable, NamedTuple, Optional
+
 from paddleocr_spark.kernel import extract_payload, assemble_text, plain_spans
 from paddleocr_spark.functions.sniff import sniff_kind
 from paddleocr_spark.functions.htmltok import html_blocks
@@ -294,10 +297,10 @@ _W17 = (
 ).split()
 
 
-def _html_parity(doc: str):
+def _html_parity(doc: str, where=None):
     k, spans, drop = extract_payload(doc)
     o = _ora(doc)
-    assert (k, spans, drop) == (o["kind"], o["spans"], o["n_dropped"])
+    assert (k, spans, drop) == (o["kind"], o["spans"], o["n_dropped"]), where
     return [s[2] for s in spans]
 
 
@@ -383,23 +386,6 @@ def test_v17_img_alt_not_extracted():
     assert not any("alt words" in t for t in texts)
 
 
-def test_v17_corpus_fuzz_parity():
-    n_gt_attr = n_script = n_cls = 0
-    for seed in range(2000, 2800):
-        doc = _mk_html(_random.Random(seed), _W17)
-        if ' title="' in doc or "?a>b" in doc:
-            n_gt_attr += 1
-        if "<script" in doc:
-            n_script += 1
-        if "class=sidebar" in doc or "class='sidebar'" in doc:
-            n_cls += 1
-        k, spans, drop = extract_payload(doc)
-        o = _ora(doc)
-        assert k == o["kind"] and spans == o["spans"], f"seed {seed}"
-        assert drop == o["n_dropped"], f"seed {seed}"
-    assert n_gt_attr >= 100 and n_script >= 50 and n_cls >= 300
-
-
 # ---------------------------------------------------------------------------
 # v26: non-rendered subtrees (SPEC §2.2 Skipped subtrees)
 # ---------------------------------------------------------------------------
@@ -470,22 +456,6 @@ def test_v26_traps_pinned():
     assert "leaked words here" in joined
     assert "tail paragraph text" in joined
 
-
-def test_v26_corpus_fuzz_parity():
-    n_form = n_ns = n_trap = 0
-    for seed in range(9400, 10200):
-        doc = _mk_html(_random.Random(seed), _W17)
-        if "<select" in doc or "<textarea" in doc:
-            n_form += 1
-        if "<noscript>" in doc or "<iframe" in doc or "<template>" in doc:
-            n_ns += 1
-        if "</select><p>" in doc or "<textarea/>" in doc:
-            n_trap += 1
-        k, spans, drop = extract_payload(doc)
-        o = _ora(doc)
-        assert k == o["kind"] and spans == o["spans"], f"seed {seed}"
-        assert drop == o["n_dropped"], f"seed {seed}"
-    assert n_form >= 100 and n_ns >= 100 and n_trap >= 15
 
 # ---------------------------------------------------------------------------
 # v29: hidden elements (SPEC §2.2 Hidden elements)
@@ -606,24 +576,6 @@ def test_v29_attr_walk_junk_degrade():
     )
     joined = "\n".join(texts)
     assert "junk gone" not in joined and "junk tail renders" in joined
-
-
-def test_v29_corpus_fuzz_parity():
-    n_attr = n_style = n_trap = 0
-    for seed in range(11800, 12600):
-        doc = _mk_html(_random.Random(seed), _W17)
-        if "hidden>" in doc or 'hidden="' in doc or "HIDDEN" in doc:
-            n_attr += 1
-        if "display:none" in doc or "display: none" in doc \
-                or "display :none" in doc or "visibility: hidden" in doc:
-            n_style += 1
-        if "renders</p>" in doc:
-            n_trap += 1
-        k, spans, drop = extract_payload(doc)
-        o = _ora(doc)
-        assert k == o["kind"] and spans == o["spans"], f"seed {seed}"
-        assert drop == o["n_dropped"], f"seed {seed}"
-    assert n_attr >= 30 and n_style >= 25 and n_trap >= 15
 
 
 # ---------------------------------------------------------------------------
@@ -752,23 +704,6 @@ def test_v30_plain_and_pdf_paths_keep_verbatim():
     assert any("​" in s[2] for s in spans)
 
 
-def test_v30_corpus_fuzz_parity():
-    n_shy = n_zwsp = n_keep = 0
-    for seed in range(12600, 13400):
-        doc = _mk_html(_random.Random(seed), _W17)
-        if "&shy;" in doc or "­" in doc:
-            n_shy += 1
-        if "​" in doc or "&#8203;" in doc:
-            n_zwsp += 1
-        if "‌" in doc or "‍" in doc:
-            n_keep += 1
-        k, spans, drop = extract_payload(doc)
-        o = _ora(doc)
-        assert k == o["kind"] and spans == o["spans"], f"seed {seed}"
-        assert drop == o["n_dropped"], f"seed {seed}"
-    assert n_shy >= 25 and n_zwsp >= 20 and n_keep >= 5
-
-
 # ---------------------------------------------------------------------------
 # v32: code blocks preserve whitespace (SPEC §2.3 Code blocks)
 # ---------------------------------------------------------------------------
@@ -836,23 +771,6 @@ def test_v32_whitespace_only_pre_no_candidate():
         " here</p></article></body></html>"
     )
     assert texts == ["body text after here"]
-
-
-def test_v32_corpus_fuzz_parity():
-    n_pre = n_cr = n_inline = 0
-    for seed in range(14200, 15000):
-        doc = _mk_html(_random.Random(seed), _W17)
-        if "<pre>" in doc:
-            n_pre += 1
-        if "\r" in doc:
-            n_cr += 1
-        if "<code>" in doc:
-            n_inline += 1
-        k, spans, drop = extract_payload(doc)
-        o = _ora(doc)
-        assert k == o["kind"] and spans == o["spans"], f"seed {seed}"
-        assert drop == o["n_dropped"], f"seed {seed}"
-    assert n_pre >= 40 and n_cr >= 5 and n_inline >= 5
 
 
 # ---------------------------------------------------------------------------
@@ -979,25 +897,6 @@ def test_v34_truncation_never_raises():
         assert (k, spans, drop) == (o["kind"], o["spans"], o["n_dropped"]), cut
 
 
-def test_v34_corpus_fuzz_parity():
-    n_closed = n_open = n_dialog = n_near = 0
-    for seed in range(15800, 16600):
-        doc = _mk_html(_random.Random(seed), _W17)
-        if "<details><summary>" in doc:
-            n_closed += 1
-        if "<details open" in doc or "<details OPEN" in doc:
-            n_open += 1
-        if "<dialog" in doc:
-            n_dialog += 1
-        if "data-open" in doc or 'class="open"' in doc or "aria-open" in doc:
-            n_near += 1
-        k, spans, drop = extract_payload(doc)
-        o = _ora(doc)
-        assert k == o["kind"] and spans == o["spans"], f"seed {seed}"
-        assert drop == o["n_dropped"], f"seed {seed}"
-    assert n_closed >= 20 and n_open >= 10 and n_dialog >= 5 and n_near >= 5
-
-
 # ---------------------------------------------------------------------------
 # v35: ruby annotations (SPEC §2.2 Ruby annotations)
 # ---------------------------------------------------------------------------
@@ -1045,23 +944,6 @@ def test_v35_table_interplay_and_stray_close():
         "<p>stray</rp> close is a harmless no-op</p>"
     ))
     assert texts2 == ["stray close is a harmless no-op"]
-
-
-def test_v35_corpus_fuzz_parity():
-    n_ruby = n_rp = n_cell = 0
-    for seed in range(16600, 17400):
-        doc = _mk_html(_random.Random(seed), _W17)
-        if "<ruby>" in doc:
-            n_ruby += 1
-        if "<rp>" in doc:
-            n_rp += 1
-        if "<td><ruby>" in doc:
-            n_cell += 1
-        k, spans, drop = extract_payload(doc)
-        o = _ora(doc)
-        assert k == o["kind"] and spans == o["spans"], f"seed {seed}"
-        assert drop == o["n_dropped"], f"seed {seed}"
-    assert n_ruby >= 25 and n_rp >= 15 and n_cell >= 2
 
 
 # ---------------------------------------------------------------------------
@@ -1134,23 +1016,6 @@ def test_v37_caption_link_counts():
     assert spans == [] and drop == 1
 
 
-def test_v37_corpus_fuzz_parity():
-    n_cap = n_foot_first = n_head = 0
-    for seed in range(18200, 19000):
-        doc = _mk_html(_random.Random(seed), _W17)
-        if "<caption>" in doc:
-            n_cap += 1
-        if "</tfoot><tbody>" in doc:
-            n_foot_first += 1
-        if "<thead>" in doc:
-            n_head += 1
-        k, spans, drop = extract_payload(doc)
-        o = _ora(doc)
-        assert k == o["kind"] and spans == o["spans"], f"seed {seed}"
-        assert drop == o["n_dropped"], f"seed {seed}"
-    assert n_cap >= 10 and n_foot_first >= 5 and n_head >= 15
-
-
 # ---------------------------------------------------------------------------
 # v39: media fallback content (SPEC §2.2 Media fallback content)
 # ---------------------------------------------------------------------------
@@ -1199,23 +1064,6 @@ def test_v39_nested_media_and_block_flush_inside():
         "<p>still hidden text</p></video><p>visible tail text</p>"
     ))
     assert texts == ["visible tail text"]
-
-
-def test_v39_corpus_fuzz_parity():
-    n_vid = n_canvas = n_obj = 0
-    for seed in range(19800, 20600):
-        doc = _mk_html(_random.Random(seed), _W17)
-        if "<video" in doc:
-            n_vid += 1
-        if "<canvas>" in doc:
-            n_canvas += 1
-        if "<object" in doc:
-            n_obj += 1
-        k, spans, drop = extract_payload(doc)
-        o = _ora(doc)
-        assert k == o["kind"] and spans == o["spans"], f"seed {seed}"
-        assert drop == o["n_dropped"], f"seed {seed}"
-    assert n_vid >= 10 and n_canvas >= 8 and n_obj >= 5
 
 
 # --- v41: UA display:block set (SPEC §2.3) ------------------------------
@@ -1292,23 +1140,6 @@ def test_v41_inline_stay_inline():
         "<output>42</output> <marquee>scrolls</marquee> end</p>"
     ))
     assert texts == ["press go or name 42 scrolls end"]
-
-
-def test_v41_corpus_fuzz_parity():
-    n_dl = n_fig = n_form = 0
-    for seed in range(21400, 22200):
-        doc = _mk_html(_random.Random(seed), _W17)
-        if "<dl>" in doc:
-            n_dl += 1
-        if "<figure>" in doc:
-            n_fig += 1
-        if "<fieldset>" in doc:
-            n_form += 1
-        k, spans, drop = extract_payload(doc)
-        o = _ora(doc)
-        assert k == o["kind"] and spans == o["spans"], f"seed {seed}"
-        assert drop == o["n_dropped"], f"seed {seed}"
-    assert n_dl >= 8 and n_fig >= 6 and n_form >= 5
 
 
 # --- v42: legacy rawtext elements (SPEC §2.2) ---------------------------
@@ -1398,23 +1229,6 @@ def test_v42_suppression_and_interception_pins():
     ]
 
 
-def test_v42_corpus_fuzz_parity():
-    n_xmp = n_plain = n_listing = 0
-    for seed in range(22200, 23000):
-        doc = _mk_html(_random.Random(seed), _W17)
-        if "<xmp" in doc:
-            n_xmp += 1
-        if "<plaintext>" in doc:
-            n_plain += 1
-        if "<listing>" in doc:
-            n_listing += 1
-        k, spans, drop = extract_payload(doc)
-        o = _ora(doc)
-        assert k == o["kind"] and spans == o["spans"], f"seed {seed}"
-        assert drop == o["n_dropped"], f"seed {seed}"
-    assert n_xmp >= 8 and n_plain >= 4 and n_listing >= 4
-
-
 # --- v44: cell-internal block boundaries (SPEC §2.3) --------------------
 
 
@@ -1475,19 +1289,6 @@ def test_v44_hidden_cell_content_still_suppressed():
     ))
     assert (k, spans, drop) == (o["kind"], o["spans"], o["n_dropped"])
     assert [s[2] for s in spans] == ["visible tail"]
-
-
-def test_v44_corpus_fuzz_parity():
-    n_br = 0
-    for seed in range(23800, 24600):
-        doc = _mk_html(_random.Random(seed), _W17)
-        if "<br>" in doc and "<table" in doc:
-            n_br += 1
-        k, spans, drop = extract_payload(doc)
-        o = _ora(doc)
-        assert k == o["kind"] and spans == o["spans"], f"seed {seed}"
-        assert drop == o["n_dropped"], f"seed {seed}"
-    assert n_br >= 5
 
 
 # --- v46: foreign content (SPEC §2.2) -----------------------------------
@@ -1551,21 +1352,6 @@ def test_v46_svg_traps():
     )) == ["head text"]
 
 
-def test_v46_corpus_fuzz_parity():
-    n_svg = n_math = 0
-    for seed in range(25400, 26200):
-        doc = _mk_html(_random.Random(seed), _W17)
-        if "<svg" in doc:
-            n_svg += 1
-        if "<math>" in doc:
-            n_math += 1
-        k, spans, drop = extract_payload(doc)
-        o = _ora(doc)
-        assert k == o["kind"] and spans == o["spans"], f"seed {seed}"
-        assert drop == o["n_dropped"], f"seed {seed}"
-    assert n_svg >= 15 and n_math >= 5
-
-
 # --- v50: declarative shadow DOM (SPEC §2.2) ----------------------------
 
 
@@ -1607,19 +1393,6 @@ def test_v50_nested_inside_plain_template_is_inert():
     )) == ["after all"]
 
 
-def test_v50_corpus_fuzz_parity():
-    n_sr = 0
-    for seed in range(28600, 29400):
-        doc = _mk_html(_random.Random(seed), _W17)
-        if "shadowrootmode" in doc:
-            n_sr += 1
-        k, spans, drop = extract_payload(doc)
-        o = _ora(doc)
-        assert k == o["kind"] and spans == o["spans"], f"seed {seed}"
-        assert drop == o["n_dropped"], f"seed {seed}"
-    assert n_sr >= 10
-
-
 # --- v55: popover attribute (SPEC §2.2) ---------------------------------
 
 
@@ -1646,20 +1419,6 @@ def test_v55_near_miss_pins_render():
         '<button popovertargetaction="show">action label text</button>'
         "<p>tail here</p>"
     )) == ["action label text", "tail here"]
-
-
-def test_v55_corpus_fuzz_parity():
-    for seed in range(32600, 33400):
-        doc = _mk_html(_random.Random(seed), _W17)
-        k, spans, drop = extract_payload(doc)
-        o = _ora(doc)
-        assert k == o["kind"] and spans == o["spans"], f"seed {seed}"
-        assert drop == o["n_dropped"], f"seed {seed}"
-    n_po = 0
-    for seed in range(32600, 35000):
-        if "popover" in _mk_html(_random.Random(seed), _W17):
-            n_po += 1
-    assert n_po >= 15, n_po
 
 
 # ---------------------------------------------------------------------------
@@ -1757,14 +1516,112 @@ def test_v58_id_first_match_and_case_sensitivity():
     )) == ["lower renders fine", "datum renders fine"]
 
 
-def test_v58_corpus_fuzz_parity():
-    n58 = 0
-    for seed in range(36600, 37400):
-        doc = _mk_html(_random.Random(seed), _W17)
-        if "sheetgone" in doc or "idgone" in doc or "multiclass" in doc:
-            n58 += 1
-        k, spans, drop = extract_payload(doc)
-        o = _ora(doc)
-        assert k == o["kind"] and spans == o["spans"], f"seed {seed}"
-        assert drop == o["n_dropped"], f"seed {seed}"
-    assert n58 >= 15, n58
+# ---------------------------------------------------------------------------
+# Corpus sweeps: one row per HTML wave. Each row checks kernel == oracle on
+# every corpus doc of its seed window, and that the wave's constructs fire
+# at least ``at_least`` times over ``band`` (default: the same window).
+# ---------------------------------------------------------------------------
+
+
+@functools.lru_cache(maxsize=None)
+def _html_doc(seed: int) -> str:
+    """The corpus generator's HTML payload for ``seed``, built once per test run."""
+    return _mk_html(_random.Random(seed), _W17)
+
+
+def _has(*subs: str) -> Callable[[str], bool]:
+    """Predicate: the document contains at least one of ``subs``."""
+    return lambda doc: any(sub in doc for sub in subs)
+
+
+class Fires(NamedTuple):
+    construct: str  # a substring of the document, unless ``test`` is given
+    at_least: int
+    test: Optional[Callable[[str], object]] = None
+    band: Optional[range] = None  # seeds counted; default the parity window
+
+
+class Wave(NamedTuple):
+    wave: str
+    seeds: range
+    fires: tuple = ()
+
+
+WAVES = (
+    Wave("v17", range(2000, 2800), (
+        Fires("> inside an attribute", 100, _has(' title="', "?a>b")),
+        Fires("<script", 50),
+        Fires("class=sidebar", 300, _has("class=sidebar", "class='sidebar'")),
+    )),
+    Wave("v26", range(9400, 10200), (
+        Fires("form control", 100, _has("<select", "<textarea")),
+        Fires("non-rendered subtree", 100, _has("<noscript>", "<iframe", "<template>")),
+        Fires("form-control trap", 15, _has("</select><p>", "<textarea/>")),
+    )),
+    Wave("v29", range(11800, 12600), (
+        Fires("hidden attribute", 30, _has("hidden>", 'hidden="', "HIDDEN")),
+        Fires("hiding style", 25, _has(
+            "display:none", "display: none", "display :none", "visibility: hidden")),
+        Fires("renders</p>", 15),
+    )),
+    Wave("v30", range(12600, 13400), (
+        Fires("soft hyphen", 25, _has("&shy;", "\xad")),
+        Fires("zero-width space", 20, _has("\u200b", "&#8203;")),
+        Fires("ZWNJ or ZWJ", 5, _has("\u200c", "\u200d")),
+    )),
+    Wave("v32", range(14200, 15000), (
+        Fires("<pre>", 40), Fires("\r", 5), Fires("<code>", 5),
+    )),
+    Wave("v34", range(15800, 16600), (
+        Fires("<details><summary>", 20),
+        Fires("open details", 10, _has("<details open", "<details OPEN")),
+        Fires("<dialog", 5),
+        Fires("open near-miss", 5, _has("data-open", 'class="open"', "aria-open")),
+    )),
+    Wave("v35", range(16600, 17400), (
+        Fires("<ruby>", 25), Fires("<rp>", 15), Fires("<td><ruby>", 2),
+    )),
+    Wave("v37", range(18200, 19000), (
+        Fires("<caption>", 10), Fires("</tfoot><tbody>", 5), Fires("<thead>", 15),
+    )),
+    Wave("v39", range(19800, 20600), (
+        Fires("<video", 10), Fires("<canvas>", 8), Fires("<object", 5),
+    )),
+    Wave("v41", range(21400, 22200), (
+        Fires("<dl>", 8), Fires("<figure>", 6), Fires("<fieldset>", 5),
+    )),
+    Wave("v42", range(22200, 23000), (
+        Fires("<xmp", 8), Fires("<plaintext>", 4), Fires("<listing>", 4),
+    )),
+    Wave("v44", range(23800, 24600), (
+        Fires("<br> in a table", 5, lambda d: "<br>" in d and "<table" in d),
+    )),
+    Wave("v46", range(25400, 26200), (Fires("<svg", 15), Fires("<math>", 5))),
+    Wave("v50", range(28600, 29400), (Fires("shadowrootmode", 10),)),
+    Wave("v55", range(32600, 33400), (
+        Fires("popover", 15, band=range(32600, 35000)),
+    )),
+    Wave("v58", range(36600, 37400), (
+        Fires("style sheet hide", 15, _has("sheetgone", "idgone", "multiclass")),
+    )),
+)
+
+
+def _sweep(wave: Wave) -> None:
+    for seed in wave.seeds:
+        _html_parity(_html_doc(seed), where=(wave.wave, seed))
+    for f in wave.fires:
+        test = f.test or (lambda doc: f.construct in doc)
+        n = sum(1 for seed in f.band or wave.seeds if test(_html_doc(seed)))
+        assert n >= f.at_least, (wave.wave, f.construct, n)
+
+
+def _row_test(wave: Wave):
+    def test():
+        _sweep(wave)
+    return test
+
+
+# One named test per row, so ``-k v58`` selects one wave and a failure names it.
+for _wave in WAVES:
+    globals()[f"test_{_wave.wave}_corpus_fuzz_parity"] = _row_test(_wave)

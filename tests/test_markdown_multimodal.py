@@ -1,12 +1,10 @@
-"""Tests: markdown assembly, fragment merge, multimodal plumbing."""
+"""Tests: markdown assembly, multimodal plumbing."""
 
 from __future__ import annotations
 
 import pytest
 from pyspark.sql import functions as F
 
-from paddleocr_spark.config import ExtractConfig
-from paddleocr_spark.functions.pdflike import merge_fragments, pdflike_spans
 from paddleocr_spark.operators.markdown import render_markdown
 from paddleocr_spark.operators.multimodal import (
     FEATURE_DIM,
@@ -35,31 +33,6 @@ def test_render_markdown_kinds(spark):
     assert "- item one" in md
     assert "| a | b |" in md and "| c | d |" in md
     assert "```\nx = 1\n```" in md
-
-
-def test_merge_fragments_fixpoint():
-    # three fragments on one visual row (within y-tol, x-gaps <= 10) + one far
-    boxes = [
-        (50, 100, 200, 130, 0, "alpha"),
-        (205, 102, 380, 131, 1, "beta"),
-        (388, 99, 500, 129, 2, "gamma"),
-        (50, 300, 200, 330, 3, "other"),
-    ]
-    out = merge_fragments(boxes, y_tol=10, x_gap=10)
-    assert len(out) == 2
-    merged = [b for b in out if b[1] < 200][0]
-    assert merged[5] == "alpha beta gamma"
-    assert merged[0] == 50 and merged[2] == 500 and merged[4] == 0
-
-
-def test_merge_fragments_in_pdf_path():
-    payload = "PDFLIKE v1\n0|50,100,200,130|alpha\n0|205,102,380,131|beta"
-    base = ExtractConfig()
-    merged_cfg = ExtractConfig(merge_fragments=True)
-    spans_plain, _ = pdflike_spans(payload, base)
-    spans_merged, _ = pdflike_spans(payload, merged_cfg)
-    assert [s[1] for s in spans_plain] == ["alpha", "beta"]
-    assert [s[1] for s in spans_merged] == ["alpha beta"]
 
 
 def test_multimodal_features(spark):

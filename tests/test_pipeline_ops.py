@@ -173,8 +173,10 @@ def test_transcript_extractor_api(spark, sf_dir):
     from paddleocr_spark.api import TranscriptExtractor
     from paddleocr_spark.plans.flagship import corpus_df
 
-    with pytest.raises(TypeError):
-        TranscriptExtractor(bogus_param=1)
+    for name in ("bogus_param", "merge_fragments", "drop_invisible_text",
+                 "keep_artifact_text"):
+        with pytest.raises(TypeError):
+            TranscriptExtractor(**{name: True})
 
     ex = TranscriptExtractor(min_chars=5)
     assert ex.cfg.min_chars == 5

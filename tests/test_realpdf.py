@@ -204,26 +204,6 @@ def test_fuzz_kernel_oracle_parity(cfg):
         assert assemble_text(spans, cfg) == oracle_extract(doc, cfg)["extracted_text"], seed
 
 
-def test_merge_fragments_config_path():
-    """cfg.merge_fragments joins x-adjacent same-row shows (kernel-only
-    golden — the oracle skips this opt-in stage, same as the PDFLIKE path)."""
-    ops = (
-        "BT /F1 10 Tf 1 0 0 1 72 700 Tm (left piece) Tj ET\n"
-        "BT /F1 10 Tf 1 0 0 1 146 700 Tm (right piece) Tj ET"
-    )
-    # advance(left piece) = 0.5*10*10 = 50pt → x1 = 122pt ≈ canonical 159;
-    # right x0 = 146pt ≈ canonical 191 — gap 32 > y_band, no merge; move
-    # closer for the merging case
-    near = (
-        "BT /F1 10 Tf 1 0 0 1 72 700 Tm (left piece) Tj ET\n"
-        "BT /F1 10 Tf 1 0 0 1 125 700 Tm (right piece) Tj ET"
-    )
-    spans_far = realpdf_spans(_pdf(ops), ExtractConfig(merge_fragments=True))[0]
-    spans_near = realpdf_spans(_pdf(near), ExtractConfig(merge_fragments=True))[0]
-    assert [s[1] for s in spans_far] == ["left piece", "right piece"]
-    assert [s[1] for s in spans_near] == ["left piece right piece"]
-
-
 OPS = "BT /F1 12 Tf 14 TL 72 700 Td (filter roundtrip line one) Tj T* (and line two) Tj ET"
 
 
@@ -901,35 +881,15 @@ def test_form_only_page_counts_ordinal():
 
 
 def test_tr_invisible_extracted_by_default_dropped_on_config():
-    """Mode-3 text (the OCR layer) is extracted by default; with
-    drop_invisible_text=True each suppressed show op counts dropped."""
+    """Mode-3 text (the OCR layer) is extracted and never counted dropped."""
     ops = (
         "BT /F1 12 Tf 14 TL 72 700 Td (visible) Tj\n"
         "3 Tr T* (ocr line one) Tj T* [(ocr) -300 (two)] TJ\n"
         "0 Tr T* (visible again) Tj ET"
     )
     doc = _pdf(ops)
-    cfg = ExtractConfig(drop_invisible_text=True)
     assert _texts(doc) == ["visible", "ocr line one", "ocr two", "visible again"]
-    assert _texts(doc, cfg) == ["visible", "visible again"]
-    assert _dropped(doc, cfg) == _dropped(doc) + 2  # Tj + TJ suppressed
-
-
-def test_tr_persists_across_bt_resets_per_stream():
-    """Render mode persists across BT blocks within a stream (like
-    fontsize) and resets for the next stream/form."""
-    cfg = ExtractConfig(drop_invisible_text=True)
-    ops1 = (
-        "BT /F1 12 Tf 72 700 Td 3 Tr (hidden one) Tj ET\n"
-        "BT 72 650 Td (still hidden) Tj ET"
-    )
-    ops2 = "BT /F1 12 Tf 72 600 Td (fresh stream visible) Tj ET"
-    doc = (
-        "%PDF-1.4\n"
-        f"4 0 obj\n<< /Length {len(ops1)} >>\nstream\n{ops1}\nendstream\nendobj\n"
-        f"5 0 obj\n<< /Length {len(ops2)} >>\nstream\n{ops2}\nendstream\nendobj\n"
-    )
-    assert _texts(doc, cfg) == ["fresh stream visible"]
+    assert _dropped(doc) == 0
 
 
 # ---------------------------------------------------------------------------
@@ -2066,7 +2026,7 @@ def test_literal_high_half_octal_through_base_encoding():
 
 def test_artifact_suppressed_by_default():
     """A mid-page /Artifact level (BDC-dict and BMC forms) suppresses its
-    shows — counted dropped — and keep_artifact_text=True renders them."""
+    shows, and each suppressed show counts dropped."""
     ops = (
         "BT /F1 12 Tf 72 700 Td (body line) Tj\n"
         "0 -20 Td /Artifact << /Type /Layout >> BDC (DRAFT watermark) Tj EMC\n"
@@ -2076,9 +2036,6 @@ def test_artifact_suppressed_by_default():
     doc = _pdf(ops)
     assert _texts(doc) == ["body line", "body two"]
     assert _dropped(doc) == 2  # one Tj + one TJ suppressed
-    keep = ExtractConfig(keep_artifact_text=True)
-    assert _texts(doc, keep) == ["body line", "DRAFT watermark", "deco ration", "body two"]
-    assert _dropped(doc, keep) == 0
 
 
 def test_artifact_positioning_side_effects_survive():
@@ -3073,30 +3030,17 @@ def test_v43_type3_matrix_degrades_to_thousandth():
 
 
 def test_v43_tr7_clip_only_is_invisible():
-    """Mode 7 adds glyphs to the clip path and paints nothing — with
-    drop_invisible_text it suppresses exactly like mode 3; by default
-    the OCR-layer analog extracts it."""
+    """Mode 7 adds glyphs to the clip path and paints nothing; like mode 3
+    (the OCR-layer analog) it is extracted."""
 
     doc = _pdfw(
         "BT /F5 12 Tf 7 Tr 72 700 Td (clip only line) Tj"
         " 0 Tr 1 0 0 1 72 600 Tm (visible line text) Tj ET",
     )
-    cfg = ExtractConfig(drop_invisible_text=True)
-    assert _texts(doc, cfg) == ["visible line text"] and _dropped(doc, cfg) == 1
     assert _texts(doc) == [
         "clip only line", "visible line text",
     ]
-
-
-def test_v43_tr_modes_4_to_6_stay_visible():
-    """Modes 4-6 fill/stroke AND clip — painted, never suppressed."""
-
-    cfg = ExtractConfig(drop_invisible_text=True)
-    for m in (4, 5, 6):
-        doc = _pdfw(
-            f"BT /F5 12 Tf {m} Tr 72 700 Td (mode stays shown) Tj ET",
-        )
-        assert _texts(doc, cfg) == ["mode stays shown"] and _dropped(doc, cfg) == 0
+    assert _dropped(doc) == 0
 
 
 # ---------------------------------------------------------------------------
@@ -3410,42 +3354,11 @@ def test_v52_alpha_zero_suppresses_under_config():
         "7 0 obj\n<< /Type /ExtGState /ca 0 >>\nendobj\n"
         "8 0 obj\n<< /Type /ExtGState /ca 1 >>\nendobj\n",
     )
-    cfg = ExtractConfig(drop_invisible_text=True)
-    assert _texts(doc, cfg) == ["alpha one visible"] and _dropped(doc, cfg) == 1
-    # default: the OCR-text-layer analog extracts invisible text
+    # the OCR-text-layer analog extracts invisible text
     assert _texts(doc) == [
         "alpha zero hidden", "alpha one visible",
     ]
-
-
-def test_v52_q_restores_and_noop_entries():
-    """q/Q restore the alpha flag; unknown names, entries without /ca
-    and operandless gs change nothing (a gs dict updates only the
-    parameters present)."""
-
-    doc = _pdfg52(
-        "/GS0 7 0 R /GSX 9 0 R",
-        "BT /F1 12 Tf q /GS0 gs 72 700 Td (hidden in q) Tj ET Q"
-        " BT /F1 12 Tf /Zz gs /GSX gs gs 72 600 Td (still visible here)"
-        " Tj ET",
-        "7 0 obj\n<< /ca 0.0 >>\nendobj\n"
-        "9 0 obj\n<< /Type /ExtGState /LW 2 >>\nendobj\n",
-    )
-    cfg = ExtractConfig(drop_invisible_text=True)
-    assert _texts(doc, cfg) == ["still visible here"] and _dropped(doc, cfg) == 1
-
-
-def test_v52_nonzero_ca_restores_visibility():
-
-    doc = _pdfg52(
-        "/GA 7 0 R /GB 8 0 R",
-        "BT /F1 12 Tf /GA gs 72 700 Td (ghosted away) Tj"
-        " /GB gs 1 0 0 1 72 600 Tm (half alpha shows) Tj ET",
-        "7 0 obj\n<< /ca 0 >>\nendobj\n"
-        "8 0 obj\n<< /ca 0.5 >>\nendobj\n",
-    )
-    cfg = ExtractConfig(drop_invisible_text=True)
-    assert _texts(doc, cfg) == ["half alpha shows"] and _dropped(doc, cfg) == 1
+    assert _dropped(doc) == 0
 
 
 # ---------------------------------------------------------------------------
@@ -3662,46 +3575,17 @@ def _pdfv57(form_res: str, form_ops: str, page_ops: str = "/Fx Do") -> str:
 
 
 def test_v57_form_extgstate_alpha_zero_suppresses():
-    """gs /ca 0 resolved from the FORM's own /ExtGState hides the form
-    text under drop_invisible_text — the ADVICE round-4 parity case."""
+    """Form text drawn under gs /ca 0 from the FORM's own /ExtGState is
+    extracted (the OCR-layer analog) — the ADVICE round-4 parity case."""
     doc = _pdfv57(
         " /Resources << /ExtGState << /FGA 7 0 R /FGB 8 0 R >> >>",
         "BT /F1 10 Tf /FGA gs 72 700 Td (form ghost line) Tj"
         " /FGB gs 1 0 0 1 72 600 Tm (form visible line) Tj ET",
     )
-    cfg = ExtractConfig(drop_invisible_text=True)
-    assert _texts(doc, cfg) == ["form visible line"] and _dropped(doc, cfg) == 1
-    # default config: the OCR-layer analog extracts both
     assert _texts(doc) == [
         "form ghost line", "form visible line",
     ]
-
-
-def test_v57_page_gs_name_unknown_in_form_is_noop():
-    """A gs name defined only at page level is NOT visible inside the
-    form (the form's table is authoritative) — text stays visible."""
-    doc = _pdf(
-        "/Fx Do",
-        _obj(5, "<< /Type /XObject /Subtype /Form /Length 54 >>\nstream\n"
-                "BT /F1 10 Tf /GA gs 72 700 Td (survives inside) Tj ET\nendstream")
-        + _obj(7, "<< /Type /ExtGState /ca 0 >>"),
-        " /Resources << /XObject << /Fx 5 0 R >> /ExtGState << /GA 7 0 R >> >>",
-        count=False, length=False,
-    )
-    cfg = ExtractConfig(drop_invisible_text=True)
-    assert _texts(doc, cfg) == ["survives inside"] and _dropped(doc, cfg) == 0
-
-
-def test_v57_form_alpha_does_not_leak_to_invoker():
-    """The form sets alpha 0 and never restores; text after Do on the
-    page still renders (invoker state untouched across Do)."""
-    doc = _pdfv57(
-        " /Resources << /ExtGState << /FGA 7 0 R >> >>",
-        "BT /F1 10 Tf /FGA gs 72 700 Td (ghost in form) Tj ET",
-        page_ops="/Fx Do\nBT /F1 10 Tf 72 500 Td (page text after) Tj ET",
-    )
-    cfg = ExtractConfig(drop_invisible_text=True)
-    assert _texts(doc, cfg) == ["page text after"] and _dropped(doc, cfg) == 1
+    assert _dropped(doc) == 0
 
 
 def test_v57_kidsless_subset_prefix_core_font_metrics():
@@ -4137,11 +4021,7 @@ class Wave(NamedTuple):
     wave: str
     seeds: range
     fires: tuple = ()
-    cfgs: tuple = (DEFAULT_CONFIG,)
 
-
-_KEEP_ARTIFACT = ExtractConfig(keep_artifact_text=True)
-_DROP_INVISIBLE = ExtractConfig(drop_invisible_text=True)
 
 WAVES = (
     Wave("v13", range(400, 560), (Fires("/Differences", 10),)),
@@ -4170,7 +4050,7 @@ WAVES = (
     )),
     Wave("v24", range(8000, 8400), (
         Fires("/Artifact", 40), Fires("/ActualText", 8),
-    ), (DEFAULT_CONFIG, _KEEP_ARTIFACT)),
+    )),
     Wave("v25", range(8800, 9400), (Fires("/Widths", 50),)),
     Wave("v27", range(10200, 11000), (
         Fires("/Annots", 30), Fires("hidden flag", 5, _has("/F 2", "/F 32")),
@@ -4221,7 +4101,7 @@ WAVES = (
     Wave("v51", range(29400, 30200), (Fires(" re W", 20),)),
     Wave("v52", range(30200, 31000), (
         Fires("/ExtGState", 40),
-    ), (DEFAULT_CONFIG, _DROP_INVISIBLE)),
+    )),
     Wave("v53", range(31000, 31800), (
         Fires("/Identity-V", 8, band=range(31000, 33400)),
     )),
@@ -4234,7 +4114,7 @@ WAVES = (
     # this window (the count was 8 before v59)
     Wave("v57", range(35800, 36600), (
         Fires("form alpha", 6, _has("formghost", "formnoop")),
-    ), (DEFAULT_CONFIG, _DROP_INVISIBLE)),
+    )),
     Wave("v59", range(37400, 38200), (Fires("/Filter /Standard", 25),)),
     Wave("v60", range(38200, 39000), (Fires("/W2 or /DW2", 15, _has("/W2", "/DW2")),)),
     Wave("v61", range(39000, 39800), (Fires("UTF16", 20),)),
@@ -4244,8 +4124,7 @@ WAVES = (
 
 def _sweep(wave: Wave) -> None:
     for seed in wave.seeds:
-        for cfg in wave.cfgs:
-            _parity(_corpus_doc(seed), cfg, where=(wave.wave, seed, cfg))
+        _parity(_corpus_doc(seed), where=(wave.wave, seed))
     for f in wave.fires:
         test = f.test or (lambda doc: f.construct in doc)
         n = sum(1 for seed in f.band or wave.seeds if test(_corpus_doc(seed)))
