@@ -10,17 +10,20 @@ check (a genuinely user-password-protected document) or an unsupported
 handler keeps the v11 whole-payload refusal.
 
 Supported: V1/R2 (RC4-40), V2/R3 (RC4 ≤128), V4/R4 with /CFM /V2 (RC4)
-or /AESV2 (AES-128-CBC), V5/R6 with /AESV3 (AES-256-CBC). RC4 and AES
-are vendored pure-stdlib below (AES tables are GENERATED at import from
-the GF(2^8) arithmetic, both directions — the corpus/test encryptor uses
-the forward cipher, the kernel the inverse).
+or /AESV2 (AES-128-CBC), V5/R6 with /AESV3 (AES-256-CBC). AES comes from
+the installed ``cryptography`` package (the corpus/test encryptor uses
+the forward direction, the kernel the inverse). RC4 stays hand-written:
+``cryptography``'s ARC4 accepts only 40/56/64/80/128/160/192/256-bit
+keys, and an RC4 PDF with /Length 48–80 needs 11–15-byte object keys.
 """
 
 from __future__ import annotations
 
 import hashlib
 import struct
-from typing import List, Optional
+from typing import Optional
+
+from cryptography.hazmat.primitives.ciphers import Cipher, algorithms, modes
 
 # --- RC4 -------------------------------------------------------------------
 
@@ -42,150 +45,19 @@ def rc4(key: bytes, data: bytes) -> bytes:
     return bytes(out)
 
 
-# --- AES (FIPS-197), tables generated at import ----------------------------
-
-
-def _gmul(a: int, b: int) -> int:
-    p = 0
-    for _ in range(8):
-        if b & 1:
-            p ^= a
-        hi = a & 0x80
-        a = (a << 1) & 0xFF
-        if hi:
-            a ^= 0x1B
-        b >>= 1
-    return p
-
-
-def _make_sbox():
-    # multiplicative inverse in GF(2^8) + the affine transform
-    inv = [0] * 256
-    for x in range(1, 256):
-        for y in range(1, 256):
-            if _gmul(x, y) == 1:
-                inv[x] = y
-                break
-    def rotl(b: int, k: int) -> int:
-        return ((b << k) | (b >> (8 - k))) & 0xFF
-
-    sbox = [0] * 256
-    for x in range(256):
-        b = inv[x]
-        sbox[x] = b ^ rotl(b, 1) ^ rotl(b, 2) ^ rotl(b, 3) ^ rotl(b, 4) ^ 0x63
-    return sbox
-
-
-_SBOX = _make_sbox()
-_INV_SBOX = [0] * 256
-for _i, _v in enumerate(_SBOX):
-    _INV_SBOX[_v] = _i
-_RCON = [0x01]
-for _ in range(13):
-    _RCON.append(_gmul(_RCON[-1], 2))
-# constant-multiplier lookup tables: the round functions only ever
-# multiply by 2,3 (forward) and 9,11,13,14 (inverse) — precomputing them
-# turns each MixColumns into pure indexing (~15× over the bit loop)
-_M = {c: [_gmul(x, c) for x in range(256)] for c in (2, 3, 9, 11, 13, 14)}
-_M2, _M3 = _M[2], _M[3]
-_M9, _M11, _M13, _M14 = _M[9], _M[11], _M[13], _M[14]
-
-
-import functools
-
-
-@functools.lru_cache(maxsize=256)
-def _expand_key(key: bytes) -> List[List[int]]:
-    nk = len(key) // 4
-    nr = nk + 6
-    w = [list(key[4 * i : 4 * i + 4]) for i in range(nk)]
-    for i in range(nk, 4 * (nr + 1)):
-        t = list(w[i - 1])
-        if i % nk == 0:
-            t = t[1:] + t[:1]
-            t = [_SBOX[b] for b in t]
-            t[0] ^= _RCON[i // nk - 1]
-        elif nk > 6 and i % nk == 4:
-            t = [_SBOX[b] for b in t]
-        w.append([w[i - nk][j] ^ t[j] for j in range(4)])
-    return w
-
-
-def _add_rk(st: List[int], w, rnd: int) -> None:
-    for c in range(4):
-        wk = w[4 * rnd + c]
-        for r in range(4):
-            st[4 * c + r] ^= wk[r]
-
-
-def _cipher_block(block: bytes, w, nr: int) -> bytes:
-    st = list(block)
-    _add_rk(st, w, 0)
-    for rnd in range(1, nr):
-        st = [_SBOX[b] for b in st]
-        # ShiftRows on column-major state: row r rotates left r
-        st = [st[(4 * ((c + r) % 4)) + r] for c in range(4) for r in range(4)]
-        ns = [0] * 16
-        for c in range(4):
-            a0, a1, a2, a3 = st[4 * c : 4 * c + 4]
-            ns[4 * c + 0] = _M2[a0] ^ _M3[a1] ^ a2 ^ a3
-            ns[4 * c + 1] = a0 ^ _M2[a1] ^ _M3[a2] ^ a3
-            ns[4 * c + 2] = a0 ^ a1 ^ _M2[a2] ^ _M3[a3]
-            ns[4 * c + 3] = _M3[a0] ^ a1 ^ a2 ^ _M2[a3]
-        st = ns
-        _add_rk(st, w, rnd)
-    st = [_SBOX[b] for b in st]
-    st = [st[(4 * ((c + r) % 4)) + r] for c in range(4) for r in range(4)]
-    _add_rk(st, w, nr)
-    return bytes(st)
-
-
-def _inv_cipher_block(block: bytes, w, nr: int) -> bytes:
-    st = list(block)
-    _add_rk(st, w, nr)
-    for rnd in range(nr - 1, 0, -1):
-        # InvShiftRows: row r rotates right r
-        st = [st[(4 * ((c - r) % 4)) + r] for c in range(4) for r in range(4)]
-        st = [_INV_SBOX[b] for b in st]
-        _add_rk(st, w, rnd)
-        ns = [0] * 16
-        for c in range(4):
-            a0, a1, a2, a3 = st[4 * c : 4 * c + 4]
-            ns[4 * c + 0] = _M14[a0] ^ _M11[a1] ^ _M13[a2] ^ _M9[a3]
-            ns[4 * c + 1] = _M9[a0] ^ _M14[a1] ^ _M11[a2] ^ _M13[a3]
-            ns[4 * c + 2] = _M13[a0] ^ _M9[a1] ^ _M14[a2] ^ _M11[a3]
-            ns[4 * c + 3] = _M11[a0] ^ _M13[a1] ^ _M9[a2] ^ _M14[a3]
-        st = ns
-    st = [st[(4 * ((c - r) % 4)) + r] for c in range(4) for r in range(4)]
-    st = [_INV_SBOX[b] for b in st]
-    _add_rk(st, w, 0)
-    return bytes(st)
+# --- AES (the installed ``cryptography`` package) ---------------------------
 
 
 def _cbc_encrypt(key: bytes, iv: bytes, data: bytes) -> bytes:
     """AES-CBC over whole blocks: no padding, IV not prepended."""
-    w = _expand_key(key)
-    nr = len(key) // 4 + 6
-    prev = iv
-    out = bytearray()
-    for off in range(0, len(data), 16):
-        blk = bytes(x ^ y for x, y in zip(data[off : off + 16], prev))
-        prev = _cipher_block(blk, w, nr)
-        out += prev
-    return bytes(out)
+    enc = Cipher(algorithms.AES(key), modes.CBC(iv)).encryptor()
+    return enc.update(data) + enc.finalize()
 
 
-def _cbc_decrypt(key: bytes, iv: bytes, data: bytes) -> bytearray:
+def _cbc_decrypt(key: bytes, iv: bytes, data: bytes) -> bytes:
     """Inverse of ``_cbc_encrypt``."""
-    w = _expand_key(key)
-    nr = len(key) // 4 + 6
-    prev = iv
-    out = bytearray()
-    for off in range(0, len(data), 16):
-        blk = data[off : off + 16]
-        out += bytes(x ^ y for x, y in zip(_inv_cipher_block(blk, w, nr), prev))
-        prev = blk
-    return out
+    dec = Cipher(algorithms.AES(key), modes.CBC(iv)).decryptor()
+    return dec.update(data) + dec.finalize()
 
 
 def aes_decrypt_cbc(key: bytes, data: bytes) -> Optional[bytes]:
@@ -197,7 +69,7 @@ def aes_decrypt_cbc(key: bytes, data: bytes) -> Optional[bytes]:
     pad = out[-1]
     if not 1 <= pad <= 16 or len(out) < pad:
         return None
-    return bytes(out[:-pad])
+    return out[:-pad]
 
 
 def aes_encrypt_cbc(key: bytes, iv: bytes, data: bytes) -> bytes:
@@ -212,7 +84,7 @@ def aes_decrypt_cbc_noiv(key: bytes, data: bytes) -> Optional[bytes]:
     unwrap (ISO 32000-2 §7.6.4.4.8)."""
     if len(data) % 16 or not data:
         return None
-    return bytes(_cbc_decrypt(key, bytes(16), data))
+    return _cbc_decrypt(key, bytes(16), data)
 
 
 def aes_encrypt_cbc_noiv(key: bytes, data: bytes) -> bytes:
@@ -274,7 +146,6 @@ def object_key(key: bytes, num: int, gen: int, aes: bool) -> bytes:
     return k[: min(len(key) + 5, 16)]
 
 
-@functools.lru_cache(maxsize=64)
 def _r6_hash(password: bytes, salt: bytes, udata: bytes = b"") -> bytes:
     """ISO 32000-2 §7.6.4.3.4 Algorithm 2.B (SHA-256/384/512 mix)."""
     k = hashlib.sha256(password + salt + udata).digest()

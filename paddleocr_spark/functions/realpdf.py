@@ -3714,6 +3714,11 @@ def _decrypt_document(text: str):
         km = ebody.find("/EncryptMetadata")
         enc_md = "false" not in ebody[km : km + 26]
     aes = False
+    if v in (4, 5) and (
+        _key_name(ebody, "/StmF") != "StdCF"
+        or _key_name(ebody, "/StrF") != "StdCF"
+    ):
+        return None  # Identity/mixed filters: out of scope (pinned)
     if v in (1, 2):
         nbytes = 5 if v == 1 else max(5, min(16, length // 8))
         key = file_key_rc4(o, p, id0, r, nbytes, enc_md)
@@ -3733,12 +3738,8 @@ def _decrypt_document(text: str):
             aes = True
         elif cfm != "V2":
             return None
-        if (
-            _key_name(ebody, "/StmF") != "StdCF"
-            or _key_name(ebody, "/StrF") != "StdCF"
-        ):
-            return None  # Identity/mixed filters: out of scope (pinned)
-        nbytes = max(5, min(16, length // 8)) if length else 16
+        # an AESV2 file key is always 128 bits, whatever /Length says
+        nbytes = 16 if aes else max(5, min(16, length // 8))
         key = file_key_rc4(o, p, id0, r, nbytes, enc_md)
         ok = user_check_r34(key, id0) == u[:16]
     elif v == 5:

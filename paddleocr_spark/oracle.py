@@ -3862,6 +3862,11 @@ def _rpdf_decrypt(text: str):
     if km >= 0:
         enc_md = "false" not in eb[km : km + 26]
     aes = False
+    if v in (4, 5) and (
+        _rpdf_key_name(eb, "/StmF") != "StdCF"
+        or _rpdf_key_name(eb, "/StrF") != "StdCF"
+    ):
+        return None
     if v in (1, 2):
         nb = 5 if v == 1 else max(5, min(16, length // 8))
         key = _o_file_key(o, p, id0, r, nb, enc_md)
@@ -3884,12 +3889,7 @@ def _rpdf_decrypt(text: str):
             aes = True
         elif cfm != "V2":
             return None
-        if (
-            _rpdf_key_name(eb, "/StmF") != "StdCF"
-            or _rpdf_key_name(eb, "/StrF") != "StdCF"
-        ):
-            return None
-        nb = max(5, min(16, length // 8)) if length else 16
+        nb = 16 if aes else max(5, min(16, length // 8))
         key = _o_file_key(o, p, id0, r, nb, enc_md)
         x = _o_rc4(key, hashlib.md5(_O_CRYPT_PAD + id0).digest())
         for it in range(1, 20):

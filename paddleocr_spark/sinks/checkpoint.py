@@ -1,7 +1,7 @@
 """Checkpointed, resumable extraction sink with per-partition lineage+metrics.
 
 North-rule clause: "resumable from checkpoint with per-partition lineage +
-metrics" (/root/repo/BASELINE.json). The reference's only resume story is
+metrics" (BASELINE.json). The reference's only resume story is
 re-running `predict_system.py` over the file list; here resume is a first-class
 sink contract:
 

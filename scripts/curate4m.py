@@ -2,7 +2,7 @@
 turns (sf0.1 corpus x 100 reps) — the r03 verdict's item #3. Records wall,
 per-stage Observation counts and the CC round count; results go to BENCH.md.
 
-Usage: PYTHONPATH=/root/repo python scripts/curate4m.py [reps] [out_root]
+Usage: python scripts/curate4m.py [reps] [out_root]
 """
 
 from __future__ import annotations
@@ -13,7 +13,7 @@ import shutil
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from paddleocr_spark.corpus import transcripts_df
 from paddleocr_spark.operators.extract import extract

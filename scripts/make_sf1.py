@@ -6,7 +6,7 @@ spawns 10 variants with distinct doc_ids and a doc_id-seeded word shuffle
 coverage at sf1 is not ten literal copies of sf0.1). Writes ONLY the tables
 the extraction golden path reads (documents.parquet).
 
-Usage: PYTHONPATH=/root/repo python scripts/make_sf1.py [dest_dir]
+Usage: python scripts/make_sf1.py [dest_dir]
 """
 
 from __future__ import annotations

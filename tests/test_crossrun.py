@@ -93,10 +93,11 @@ def test_job_cli_dedup_against(tmp_path):
         ),
         str(sf / "documents.parquet"),
     )
-    env = {**os.environ, "PYTHONPATH": "/root/repo"}
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    env = {**os.environ, "PYTHONPATH": root}
 
     def run(extra):
-        cmd = [sys.executable, "/root/repo/job.py", "--sf-dir", str(sf),
+        cmd = [sys.executable, os.path.join(root, "job.py"), "--sf-dir", str(sf),
                "--n-buckets", "4", "--no-salt"] + extra
         out = subprocess.run(cmd, capture_output=True, text=True, env=env,
                              timeout=420, cwd=str(tmp_path))
