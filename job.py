@@ -32,7 +32,10 @@ def main() -> None:
     p.add_argument("--out", required=True, help="checkpointed output dir")
     p.add_argument("--reps", type=int, default=1)
     p.add_argument("--n-buckets", type=int, default=64)
-    p.add_argument("--group-size", type=int, default=32)
+    p.add_argument("--group-size", type=int, default=None,
+                   help="buckets per committed group; the default puts all "
+                   "uncommitted buckets in one group. Smaller groups give "
+                   "finer resume granularity but re-scan the input per group")
     p.add_argument(
         "--no-salt", action="store_true",
         help="skip the pre-UDF salted repartition (the 100 TB default: scan "

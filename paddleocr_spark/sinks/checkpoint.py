@@ -12,7 +12,9 @@ sink contract:
 - Buckets are processed in groups; each group is one Spark write job followed
   by an atomic manifest commit (`_manifest/group-*.json`) recording lineage
   (run_id, buckets, wall time) and metrics (turns, spans, bytes, failures —
-  collected via ``df.observe``, i.e. zero extra passes).
+  collected via ``df.observe``, i.e. zero extra passes). A run is one group
+  by default; ``group_size`` sets a finer resume granularity, at the price of
+  one input scan and salt shuffle per group.
 - A rerun reads the manifest and processes ONLY uncommitted buckets: committed
   work is never recomputed and never double-counted (metrics live in the same
   atomic manifest entry as the data commit).
@@ -189,13 +191,24 @@ class CheckpointWriter:
         return out
 
 
+def _metric_aggs() -> list:
+    """The manifest's per-group metrics over extracted rows (turns, spans,
+    text bytes, zero-span failures), for ``DataFrame.observe``."""
+    return [
+        F.count(F.lit(1)).alias("turns"),
+        F.sum("n_spans").alias("spans"),
+        F.sum(F.length("extracted_text")).alias("bytes"),
+        F.sum((F.col("n_spans") == 0).cast("long")).alias("failures"),
+    ]
+
+
 def run_extract_job(
     spark: SparkSession,
     transcripts: DataFrame,
     out_dir: str,
     cfg: ExtractConfig = DEFAULT_CONFIG,
     n_buckets: int = 64,
-    group_size: int = 32,
+    group_size: int | None = None,
     run_id: str | None = None,
     salt: bool = True,
 ) -> dict:
@@ -204,6 +217,13 @@ def run_extract_job(
     Returns a summary dict {run_id, groups_run, buckets_done, turns, spans,
     bytes, failures} aggregated over THIS run's groups (previously committed
     groups are skipped and not re-counted).
+
+    By default every uncommitted bucket goes into one group: one input scan,
+    one salt shuffle, one write job and one manifest commit. An integer
+    ``group_size`` commits that many buckets per group, so a crash loses at
+    most one group's work; but each group filters on the computed bucket, so
+    unless the input is itself bucket-partitioned on ``conv_id`` every group
+    re-scans and re-shuffles the full input (docs/SCALE_100TB.md §3).
 
     ``out_dir`` may be a directory path (parquet group-dir sink + JSON
     manifest — the sandbox mode) or an Iceberg table name (no path
@@ -234,7 +254,8 @@ def run_extract_job(
     )
     done = (iceberg_sink or w).committed_buckets()
     todo = [b for b in range(n_buckets) if b not in done]
-    groups = [todo[i : i + group_size] for i in range(0, len(todo), group_size)]
+    step = group_size or n_buckets
+    groups = [todo[i : i + step] for i in range(0, len(todo), step)]
 
     # crash hygiene: a group dir written but never manifest-committed is
     # garbage (its buckets are still in `todo` and will be recomputed under a
@@ -277,7 +298,10 @@ def run_extract_job(
         "truncated_payloads": 0,
     }
     job_t0 = time.time()
-    seq0 = len(done)  # stable-ish sequence numbering across reruns
+    # stable-ish sequence numbering across reruns; safe only because groups
+    # commit in order (out-of-order commits would let a rerun reuse, and
+    # overwrite, a committed group= dir)
+    seq0 = len(done)
     for gi, buckets in enumerate(groups):
         t0 = time.time()
         sub = bucketed.filter(F.col("bucket").isin(buckets))
@@ -301,10 +325,7 @@ def run_extract_job(
         obs = Observation(f"extract-{run_id}-{gi}")
         out = out.observe(
             obs,
-            F.count(F.lit(1)).alias("turns"),
-            F.sum("n_spans").alias("spans"),
-            F.sum(F.length("extracted_text")).alias("bytes"),
-            F.sum((F.col("n_spans") == 0).cast("long")).alias("failures"),
+            *_metric_aggs(),
             F.sum(F.col("truncated").cast("long")).alias("truncated_payloads"),
         ).drop("truncated")
         # One parquet dir PER GROUP (partition-discovery naming, so
@@ -421,30 +442,29 @@ def compact_to(
     run_id = uuid.uuid4().hex[:12]
     total_rows = 0
     for gi, grp in enumerate(groups):
-        sub = data.filter(F.col("bucket").isin(grp))
-        n = sub.count()
+        # collected by the write itself; truncated_payloads is not in the
+        # written data, so it is not recorded
+        obs = Observation(f"compact-{run_id}-{gi}")
+        sub = data.filter(F.col("bucket").isin(grp)).observe(obs, *_metric_aggs())
         (
             sub.coalesce(max(1, len(grp) // 8))
             .write.mode("overwrite")
             .option("compression", "zstd")
             .parquet(os.path.join(dst.data_dir, f"group={gi:05d}"))
         )
-        dst.commit(
-            {
-                "run_id": run_id,
-                "group_seq": gi,
-                "dir": f"group={gi:05d}",
-                "buckets": grp,
-                "wall_s": round(time.time() - t0, 3),
-                "turns": int(n),
-                "spans": 0,
-                "bytes": 0,
-                "failures": 0,
-                "committed_at": time.time(),
-                "compacted_from": os.path.abspath(src_out),
-            }
-        )
-        total_rows += n
+        m = obs.get
+        entry = {
+            "run_id": run_id,
+            "group_seq": gi,
+            "dir": f"group={gi:05d}",
+            "buckets": grp,
+            "wall_s": round(time.time() - t0, 3),
+            **{k: int(m.get(k) or 0) for k in ("turns", "spans", "bytes", "failures")},
+            "committed_at": time.time(),
+            "compacted_from": os.path.abspath(src_out),
+        }
+        dst.commit(entry)
+        total_rows += entry["turns"]
     return {"run_id": run_id, "groups": len(groups), "rows": total_rows}
 
 

@@ -149,7 +149,6 @@ def extract_foreach_batch(
             f"{out_dir}/batch={batch_id}",
             cfg=cfg,
             n_buckets=n_buckets,
-            group_size=n_buckets,
             run_id=f"stream_{batch_id}",
         )
 

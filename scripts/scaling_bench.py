@@ -57,7 +57,6 @@ def run_one(cores: int, corpus: str, out: str) -> dict:
         os.path.join(ROOT, "job.py"),
         "--corpus", corpus,
         "--out", out,
-        "--group-size", "64",
     ]
     t0 = time.time()
     p = subprocess.run(cmd, capture_output=True, text=True, cwd=ROOT)

@@ -26,32 +26,56 @@ def transcripts(spark):
     return spark.createDataFrame(rows).cache()
 
 
-def test_resume_skips_committed(spark, transcripts, tmp_path):
+@pytest.mark.parametrize(
+    "group_size,groups", [(4, 2), (None, 1)], ids=["group_size_4", "default"]
+)
+def test_resume_skips_committed(spark, transcripts, tmp_path, group_size, groups):
     out = str(tmp_path / "ckpt")
-    s1 = run_extract_job(spark, transcripts, out, n_buckets=8, group_size=4)
-    assert s1["groups_run"] == 2 and s1["turns"] == transcripts.count()
-    s2 = run_extract_job(spark, transcripts, out, n_buckets=8, group_size=4)
+    s1 = run_extract_job(spark, transcripts, out, n_buckets=8, group_size=group_size)
+    assert s1["groups_run"] == groups and s1["turns"] == transcripts.count()
+    entries = CheckpointWriter(out, 8).metrics()
+    assert len(entries) == groups
+    if group_size is None:  # the default: one entry holding every bucket
+        assert entries[0]["buckets"] == list(range(8))
+    s2 = run_extract_job(spark, transcripts, out, n_buckets=8, group_size=group_size)
     assert s2["groups_run"] == 0 and s2["turns"] == 0
     data = spark.read.parquet(os.path.join(out, "data"))
     assert data.count() == transcripts.count()
     assert data.select("conv_id", "turn_idx").distinct().count() == transcripts.count()
 
 
-def test_partial_manifest_resume(spark, transcripts, tmp_path):
-    """Simulate a crash after the first group: drop its manifest sibling's
-    future groups, rerun, and require exactly-once output."""
+def test_partial_manifest_resume(spark, transcripts, tmp_path, monkeypatch):
+    """Crash between two group commits: the second group's data is written
+    but its manifest entry never lands. The first group is kept, the rerun
+    recomputes only the second (sweeping its orphan dir), and the output has
+    one row per key with turns counted once."""
     out = str(tmp_path / "ckpt2")
-    run_extract_job(spark, transcripts, out, n_buckets=8, group_size=4)
+    real_commit = CheckpointWriter.commit
+    calls = []
+
+    def crash_on_second(self, entry):
+        calls.append(entry["dir"])
+        if len(calls) == 2:
+            raise RuntimeError("simulated crash before the manifest commit")
+        real_commit(self, entry)
+
+    with monkeypatch.context() as m, pytest.raises(RuntimeError, match="simulated crash"):
+        m.setattr(CheckpointWriter, "commit", crash_on_second)
+        run_extract_job(spark, transcripts, out, n_buckets=8, group_size=4)
+
     w = CheckpointWriter(out, 8)
-    manifests = sorted(os.listdir(w.manifest_dir))
-    assert len(manifests) == 2
-    # "crash": second group's manifest never landed
-    os.remove(os.path.join(w.manifest_dir, manifests[1]))
+    assert len(w.metrics()) == 1
+    orphan = os.path.join(w.data_dir, calls[1])
+    assert os.path.isdir(orphan)  # data written, never committed
+
     s = run_extract_job(spark, transcripts, out, n_buckets=8, group_size=4)
     assert s["groups_run"] == 1  # only the uncommitted half reruns
-    data = spark.read.parquet(os.path.join(out, "data"))
-    assert data.count() == transcripts.count()  # overwrite, not duplicate
-    assert data.select("conv_id", "turn_idx").distinct().count() == transcripts.count()
+    assert not os.path.exists(orphan)  # swept before the rerun wrote its dir
+    n = transcripts.count()
+    data = spark.read.parquet(w.data_dir)
+    assert data.count() == n  # overwrite, not duplicate
+    assert data.select("conv_id", "turn_idx").distinct().count() == n
+    assert sum(e["turns"] for e in w.metrics()) == n
 
 
 def test_metrics_lineage_totals(spark, transcripts, tmp_path):
@@ -266,6 +290,11 @@ def test_lineage_df_and_compact_to(spark, transcripts, tmp_path):
     b = read_committed(spark, dst).select("conv_id", "turn_idx", "extracted_text")
     assert sorted(map(tuple, a.collect())) == sorted(map(tuple, b.collect()))
     assert len(os.listdir(os.path.join(dst, "data"))) == 1  # consolidated
+    # the compaction's manifest carries the source's metrics, not zeros
+    metrics = ("turns", "spans", "bytes", "failures")
+    src_tot = {k: sum(e[k] for e in CheckpointWriter(out).metrics()) for k in metrics}
+    dst_tot = {k: sum(e[k] for e in CheckpointWriter(dst).metrics()) for k in metrics}
+    assert src_tot == dst_tot and src_tot["spans"] > 0 and src_tot["bytes"] > 0
 
 
 def test_truncation_counter_observed(spark, transcripts, tmp_path):
